@@ -171,41 +171,72 @@ def seed_discoveries(
     return spark.createDataFrame(list(rows.values()), DISC_SCHEMA)
 
 
-def _seen_filter_empty(
-    spark, seen_filter: str, buckets: int, bloom_bits: int, cuckoo_entries: int
+def _seen_filter_class(
+    seen_filter: str, buckets: int, bloom_bits: int, cuckoo_entries: int
 ):
+    """(filter class, geometry kwargs) of the configured seen filter."""
     if seen_filter == "cuckoo":
         from crawler_spark.operators.cuckoo import CuckooSeenSet
 
-        return CuckooSeenSet.empty(spark, buckets, cuckoo_entries)
+        return CuckooSeenSet, dict(n_buckets=buckets, m_entries=cuckoo_entries)
     if seen_filter != "bloom":
         raise ValueError(f"seen_filter must be bloom|cuckoo, got {seen_filter!r}")
-    return BloomSeenSet.empty(spark, buckets, bloom_bits)
+    return BloomSeenSet, dict(n_buckets=buckets, m_bits=bloom_bits)
 
 
-def _seen_filter_load(
-    spark, path: str, seen_filter: str, buckets: int, bloom_bits: int,
-    cuckoo_entries: int,
-):
-    if seen_filter == "cuckoo":
-        from crawler_spark.operators.cuckoo import CuckooSeenSet
+def _changed_after(store: CrawlStore, after: int, upto: int) -> bool:
+    """Whether a committed round in ``(after, upto]`` crawled or
+    discovered anything. Cooldown and period-wait rounds change neither
+    the frontier nor the filter; the manifests say so without a job."""
+    for r in range(after + 1, upto + 1):
+        m = store.read_manifest(r)["metrics"]
+        if m["scheduled"] or m["new_discoveries"]:
+            return True
+    return False
 
-        filt = CuckooSeenSet.load(spark, path, buckets, cuckoo_entries)
-        state, want = filt.tables, "slots"
-    elif seen_filter == "bloom":
-        filt = BloomSeenSet.load(spark, path, buckets, bloom_bits)
-        state, want = filt.blooms, "bits"
+
+def _load_state(store: CrawlStore, rnd: int, filter_cls, geo: dict):
+    """The frontier and seen filter as of committed round ``rnd`` — the
+    one loader behind both resume and the end-of-round reload.
+
+    Each table starts from its newest snapshot ``C <= rnd`` and replays
+    the discovery log written after it:
+
+        frontier = snapshot(C) ∪ discoveries(round > C)
+                   anti-join pages(round > C)
+        filter   = load(C) (empty without a snapshot)
+                   + add(discoveries(round > C))
+
+    No replay runs when no round after ``C`` changed state: an ``add``
+    over empty input still rewrites every filter bucket. The frontier
+    replays the whole log (``rebuild_frontier``) when it has no snapshot
+    and while retractions are pending — a retracted url resurfaces only
+    from its discovery row, which a snapshot older than the retraction
+    does not hold. The store holds no round above ``rnd`` here: resume
+    has removed uncommitted ones and the running crawl has not written
+    the next."""
+    spark = store.spark
+    c = store.latest_snapshot_round("frontier", rnd)
+    if c is None or store.has_retractions():
+        frontier = store.rebuild_frontier(rnd)
     else:
-        raise ValueError(f"seen_filter must be bloom|cuckoo, got {seen_filter!r}")
-    # a bloom snapshot loaded as cuckoo (or vice versa) would fail later
-    # with an opaque cogroup/schema error — fail here with the cause
-    if want not in state.columns:
-        raise ValueError(
-            f"seen-filter snapshot at {path} has columns {state.columns} — "
-            f"the store was written with the other seen_filter; resume "
-            f"with the same filter the crawl started with"
-        )
-    return filt
+        frontier = store.read_snapshot("frontier", c, DISC_SCHEMA)
+        if _changed_after(store, c, rnd):
+            crawled = store.read_pages().where(F.col("round") > c)
+            frontier = (
+                frontier.unionByName(store.discoveries_after(c))
+                .join(crawled.select("url"), "url", "left_anti")
+                .select("disc_round", "disc_seq", "url", "host")
+            )
+    c = store.latest_snapshot_round("bloom", rnd)
+    if c is None:
+        seen, c = filter_cls.empty(spark, **geo), -1
+    else:
+        path = store.table_round_path("bloom", c)
+        seen = filter_cls.load(spark, path, **geo)
+    if _changed_after(store, c, rnd):
+        seen = seen.add(store.discoveries_after(c).select("url"))
+    return frontier, seen
 
 
 def run_crawl(
@@ -228,12 +259,16 @@ def run_crawl(
     ``write_partitions`` caps files per round table — right for local/bench
     scale; pass None on a real cluster for natural partitioning.
 
-    ``frontier_snapshot_every=N`` writes the frontier snapshot every N
-    rounds; in between, the frontier is merge-on-read (``discoveries ≤ R``
-    anti-join ``pages ≤ R`` via ``store.rebuild_frontier``) — the round
-    loses one write job, at the cost of reading the discovery log. Choose
-    by shape: write-bound short-frontier crawls want a large N; a
-    10^10-row frontier whose discovery log dwarfs it wants N=1.
+    ``frontier_snapshot_every=N`` writes both state snapshots — the
+    frontier and the seen filter — on every N-th round that crawled
+    something (a cooldown or period-wait round changes neither table and
+    writes neither). Resume and the end-of-round reload are the same
+    step: the newest snapshot of each table plus a replay of the
+    discovery log written after it (``_load_state``). A larger N drops
+    two write jobs from most rounds, at the cost of replaying up to N-1
+    rounds of the log per reload. Choose by shape: write-bound
+    short-frontier crawls want a large N; a 10^10-row frontier whose
+    discovery log dwarfs it wants N=1.
 
     ``seen_filter`` picks the approximate URL-seen layer (the north
     rule's "bloom/cuckoo" pair): ``"bloom"`` (default — smaller per key,
@@ -288,9 +323,6 @@ def run_crawl(
                 f"priority_df needs columns (host, priority); missing "
                 f"{sorted(missing)} in {priority_df.columns}"
             )
-        # the rank table joins once per round for the whole crawl —
-        # persist so rounds scan executor memory (spilling to local disk
-        # at 10^8-host sizes), not the parquet files, every round.
         # max-per-host first: the dict feed was duplicate-free by
         # construction, but a parquet feed (e.g. a union of signal
         # exports) can carry a host twice, and a duplicate key in this
@@ -304,7 +336,6 @@ def run_crawl(
             )
             .groupBy("host")
             .agg(F.max("_hp").alias("_hp"))
-            .persist()
         )
         prio_hint = lambda df: df  # let AQE size the join  # noqa: E731
     elif config.priority:
@@ -341,6 +372,9 @@ def run_crawl(
     cooldown: dict[str, int] = {}
     empty_streak = 0  # consecutive rounds scheduling nothing (period wait)
 
+    filter_cls, filter_geo = _seen_filter_class(
+        seen_filter, bloom_buckets, bloom_bits, cuckoo_entries
+    )
     # the filter's shape, recorded in the store at crawl start and
     # validated on resume: geometry is not recoverable from the snapshot
     # bytes, and a silent mismatch (different bits/buckets/entries)
@@ -371,424 +405,367 @@ def run_crawl(
                 )
         frontier = seed_discoveries(spark, seeds, config)
         n_frontier = frontier.count()
-        bloom = _seen_filter_empty(
-            spark, seen_filter, bloom_buckets, bloom_bits, cuckoo_entries
-        )
+        bloom = filter_cls.empty(spark, **filter_geo)
         bloom = bloom.add(frontier.select("url"))
         start_round = 0
         seed_disc = frontier  # committed with round 0
-        have_bloom_snapshot = False  # round 0 must write the first one
         store.write_filter_geometry(geometry)
     else:
-        import os as _os
-
         stored_geo = store.read_filter_geometry()
-        if stored_geo is not None and stored_geo != geometry:
+        if stored_geo is None:
+            raise ValueError(
+                f"store at {store_root} has no filter_geometry.json — it "
+                f"was written before the seen-filter geometry was "
+                f"recorded and cannot be resumed; start a fresh crawl"
+            )
+        if stored_geo != geometry:
             raise ValueError(
                 f"seen-filter geometry mismatch: store was written with "
                 f"{stored_geo}, resume asked for {geometry} — resume "
                 f"with the geometry the crawl started with"
             )
-        if stored_geo is None:  # pre-geometry store: record for later
-            store.write_filter_geometry(geometry)
-        store.backfill_seen(bloom_buckets, last)
         # consumed retraction records (url already recrawled) retire here
         # so one campaign doesn't permanently tax every future resume
         store.retire_retractions()
+        frontier, bloom = _load_state(store, last, filter_cls, filter_geo)
         if store.has_retractions():
-            # retracted urls resurface via their original discovery rows
-            # only on the merge-on-read path (the frontier snapshot
-            # predates the retraction); their count invalidates the
-            # manifest's frontier_size, so pay one count job here —
-            # retraction resumes are campaign events, not per-round cost
-            frontier = store.rebuild_frontier(last)
+            # resurfaced retracted urls invalidate the manifest's
+            # frontier_size, so pay one count job here — retraction
+            # resumes are campaign events, not per-round cost
             n_frontier = frontier.count()
-        elif _os.path.isdir(store.table_round_path("frontier", last)):
-            frontier = store.read_snapshot("frontier", last, DISC_SCHEMA)
-            n_frontier = int(
-                store.read_manifest(last)["metrics"]["frontier_size"]
-            )
-        else:  # between snapshots: merge-on-read from the logs
-            frontier = store.rebuild_frontier(last)
+        else:
             n_frontier = int(
                 store.read_manifest(last)["metrics"]["frontier_size"]
             )
         cd = store.read_snapshot("cooldown", last, COOLDOWN_SCHEMA).collect()
         cooldown = {r["host"]: r["expire_round"] for r in cd}
-        # newest filter checkpoint at or below `last`: empty (cooldown/
-        # period-wait) rounds skip the rewrite of an unchanged filter,
-        # so `last` itself may have no snapshot
-        bloom_rnd = store.latest_snapshot_round("bloom", last)
-        if bloom_rnd is None:
-            raise ValueError(
-                f"no seen-filter checkpoint at or below round {last} in "
-                f"{store_root} — store is corrupt or was pruned past its "
-                f"last filter snapshot"
-            )
-        bloom = _seen_filter_load(
-            spark, store.table_round_path("bloom", bloom_rnd), seen_filter,
-            bloom_buckets, bloom_bits, cuckoo_entries,
-        )
-        have_bloom_snapshot = True
-        if store.has_retractions():
-            # apply pending retractions to the LOADED filter, never the
-            # on-disk snapshot (an in-place overwrite of a committed
-            # checkpoint would break the store's crash-safety — the
-            # mutated state persists through the NEXT round's normal
-            # atomic commit instead, and reapplying on a re-resume is
-            # idempotent because the disk state is unchanged until then):
-            #   1. cuckoo: DELETE the pending fingerprints (bloom cannot;
-            #      its stale positives just pay the exact-join path);
-            #   2. re-ADD urls that resurfaced in the frontier — they are
-            #      DISCOVERED again, and the filter must stay a superset
-            #      of discovered ∪ seen or a link to a retracted url
-            #      during its own recrawl round probes filter-negative,
-            #      bypasses the exact re-check, and double-crawls it.
-            ret_urls = store.read_retractions().select("url")
-            if hasattr(bloom, "delete"):
-                bloom = bloom.delete(ret_urls)
-            bloom = bloom.add(
-                frontier.join(F.broadcast(ret_urls), "url", "left_semi")
-                .select("url")
-            )
         start_round = last + 1
         seed_disc = None
 
     frontier = frontier.cache()
+    if priority_df is not None:
+        # the rank table joins once per round for the whole crawl —
+        # persist so rounds scan executor memory (spilling to local disk
+        # at 10^8-host sizes), not the parquet files, every round
+        prio_df = prio_df.persist()
     _reload_prev = 0.0  # end-of-round state-reload cost, surfaced in the NEXT round's manifest
 
-    for rnd in range(start_round, config.max_rounds):
-        # frontier size is tracked from the previous commit — no extra job
-        if n_frontier == 0:
-            break
+    scheduled = fetched = links = None
+    try:
+        for rnd in range(start_round, config.max_rounds):
+            # frontier size is tracked from the previous commit — no extra job
+            if n_frontier == 0:
+                break
 
-        # tag every job of the round (scheduler, sequencing, writes) so
-        # the manifest can record the per-round Spark job count — the
-        # number the fixed-cost budget tracks
-        job_group = f"crawl-round-{rnd}"
-        spark.sparkContext.setJobGroup(job_group, f"crawl round {rnd}")
-        _round_t0 = time.perf_counter()
+            # tag every job of the round (scheduler, sequencing, writes) so
+            # the manifest can record the per-round Spark job count — the
+            # number the fixed-cost budget tracks
+            job_group = f"crawl-round-{rnd}"
+            spark.sparkContext.setJobGroup(job_group, f"crawl round {rnd}")
+            _round_t0 = time.perf_counter()
 
-        # -- eligibility: cooldown anti-join (broadcast, one row per host) --
-        active_cd = [(h, e) for h, e in cooldown.items() if e >= rnd]
-        eligible = frontier
-        if active_cd:
-            cd_df = spark.createDataFrame(active_cd, COOLDOWN_SCHEMA)
-            eligible = frontier.join(F.broadcast(cd_df), "host", "left_anti")
+            # -- eligibility: cooldown anti-join (broadcast, one row per host) --
+            active_cd = [(h, e) for h, e in cooldown.items() if e >= rnd]
+            eligible = frontier
+            if active_cd:
+                cd_df = spark.createDataFrame(active_cd, COOLDOWN_SCHEMA)
+                eligible = frontier.join(F.broadcast(cd_df), "host", "left_anti")
 
-        # -- per-host politeness budget (skew-salted two-phase top-k) ------
-        if config.budget_periods:
-            # periodic budgets change per round — rebuild the (tiny)
-            # broadcast table from the config dicts
-            budget_df, budget_default = _budget_df(spark, config, rnd)
-        eligible = eligible.join(F.broadcast(budget_df), "host", "left").withColumn(
-            "_k", F.coalesce(F.col("_bk"), F.lit(budget_default))
-        )
-        # -- optional global round budget (fair-share across hosts) -------
-        # Hamilton apportionment of config.global_budget over each host's
-        # consumable demand min(pending, politeness budget); the per-host
-        # cap becomes the grant. One host-dimension count-agg per round
-        # plus allocate_budget's two O(1) scalar jobs — the frontier
-        # itself never re-shuffles. Serial twin: oracle hamilton_grants
-        # (golden-matched); IEEE-double quota arithmetic is identical on
-        # both sides.
-        if config.global_budget:
-            from crawler_spark.operators.allocate import allocate_budget
+            # -- per-host politeness budget (skew-salted two-phase top-k) ------
+            if config.budget_periods:
+                # periodic budgets change per round — rebuild the (tiny)
+                # broadcast table from the config dicts
+                budget_df, budget_default = _budget_df(spark, config, rnd)
+            eligible = eligible.join(F.broadcast(budget_df), "host", "left").withColumn(
+                "_k", F.coalesce(F.col("_bk"), F.lit(budget_default))
+            )
+            # -- optional global round budget (fair-share across hosts) -------
+            # Hamilton apportionment of config.global_budget over each host's
+            # consumable demand min(pending, politeness budget); the per-host
+            # cap becomes the grant. One host-dimension count-agg per round
+            # plus allocate_budget's two O(1) scalar jobs — the frontier
+            # itself never re-shuffles. Serial twin: oracle hamilton_grants
+            # (golden-matched); IEEE-double quota arithmetic is identical on
+            # both sides.
+            if config.global_budget:
+                from crawler_spark.operators.allocate import allocate_budget
 
-            demand = (
-                eligible.groupBy("host", "_k")
-                .agg(F.count("*").alias("_pend"))
-                .select(
-                    "host",
-                    F.least(
-                        F.col("_pend"), F.col("_k").cast("long")
-                    ).alias("n_pending"),
+                demand = (
+                    eligible.groupBy("host", "_k")
+                    .agg(F.count("*").alias("_pend"))
+                    .select(
+                        "host",
+                        F.least(
+                            F.col("_pend"), F.col("_k").cast("long")
+                        ).alias("n_pending"),
+                    )
                 )
-            )
-            grants = allocate_budget(
-                demand, config.global_budget, small_hint=n_frontier
-            ).select("host", F.col("granted").alias("_g"))
-            eligible = (
-                eligible.join(F.broadcast(grants), "host", "left")
-                .withColumn(
-                    "_k", F.coalesce(F.col("_g"), F.lit(0)).cast("int")
+                grants = allocate_budget(
+                    demand, config.global_budget, small_hint=n_frontier
+                ).select("host", F.col("granted").alias("_g"))
+                eligible = (
+                    eligible.join(F.broadcast(grants), "host", "left")
+                    .withColumn(
+                        "_k", F.coalesce(F.col("_g"), F.lit(0)).cast("int")
+                    )
+                    .drop("_g")
                 )
-                .drop("_g")
-            )
-        scheduled = topk_per_group(
-            eligible, ["host"], ["disc_round", "disc_seq"], F.col("_k"), salt=8
-        ).drop("_bk", "_k", "_rank")
+            scheduled = topk_per_group(
+                eligible, ["host"], ["disc_round", "disc_seq"], F.col("_k"), salt=8
+            ).drop("_bk", "_k", "_rank")
 
-        # -- deterministic global crawl order ------------------------------
-        # default: pure BFS (disc_round, disc_seq) — the reference's FIFO
-        # pop. With host priorities configured (north-rule priority
-        # queue), the order key becomes (priority DESC, BFS): one more
-        # join against the rank table — broadcast-hinted for the dict
-        # feed, AQE-sized for the distributed priority_df feed.
-        _t0 = time.perf_counter()
-        order_cols = ["disc_round", "disc_seq"]
-        if prio_df is not None:
-            scheduled = (
-                scheduled.join(prio_hint(prio_df), "host", "left")
-                .withColumn(
-                    "_nprio", -F.coalesce(F.col("_hp"), F.lit(0.0))
-                )
-                .drop("_hp")
-            )
-            order_cols = ["_nprio", "disc_round", "disc_seq"]
-        # the tracked frontier size is a hard row bound for the schedule —
-        # small rounds take with_global_seq's one-job bounded path, big
-        # rounds (the 10^10-frontier shape) the range-partitioned one
-        scheduled, n_scheduled = with_global_seq(
-            scheduled, order_cols, out="seq",
-            return_count=True, small_hint=n_frontier,
-        )
-        if prio_df is not None:
-            scheduled = scheduled.drop("_nprio")
-        if config.round_capacity and n_scheduled > config.round_capacity:
-            # global round capacity: keep the top of the priority order;
-            # overflow is never popped, so it stays in the frontier (the
-            # frontier_rem anti-join below only removes scheduled urls)
-            scheduled = scheduled.where(
-                F.col("seq") < F.lit(config.round_capacity)
-            )
-            n_scheduled = config.round_capacity
-        scheduled = scheduled.cache()
-        phase_t = {"schedule": round(time.perf_counter() - _t0, 3)}
-        if _reload_prev:
-            # end-of-previous-round state reload (committed frontier +
-            # seen-filter re-read) — it prepares THIS round, so it is
-            # this round's fixed cost
-            phase_t["reload"] = _reload_prev
-            _reload_prev = 0.0
-        phase_t["_round_t0"] = _round_t0
-        if n_scheduled == 0:
-            # wait for periodic budgets only while a full period cycle
-            # hasn't yet passed without progress: if max(period)
-            # consecutive non-cooling rounds schedule nothing, every
-            # remaining frontier entry is permanently unschedulable (e.g.
-            # budget 0) and waiting longer only burns empty commits.
-            # Cooling rounds don't consume the period-wait allowance — a
-            # cooldown longer than the period must not starve the host
-            # whose on-round falls right after expiry. Same logic in the
-            # serial oracle (golden-matched).
-            cooling = any(e >= rnd for e in cooldown.values())
-            pending_periodic = (
-                bool(config.budget_periods)
-                and empty_streak < max(config.budget_periods.values())
-            )
-            if not cooling:
-                empty_streak += 1
-            if cooling or pending_periodic:
-                # everything eligible is cooling, or periodic budgets are
-                # configured and this may be an off round for what's left
-                # — commit an empty round so round numbering (and
-                # cooldown/period cadence) stays resumable.
-                # Pending seed discoveries commit HERE (otherwise a crash
-                # during a cooldown stretch would leave them out of the
-                # discovery log and the rebuild-from-logs frontier path
-                # would lose them); the unchanged frontier honors the
-                # snapshot interval.
-                disc_empty = (
-                    seed_disc
-                    if seed_disc is not None
-                    else spark.createDataFrame([], DISC_SCHEMA)
-                )
-                seed_disc = None
-                rc = _RoundCommit(
-                    store, rnd, spark, bloom.n_buckets, job_group=job_group
-                )
-                rc.begin(_empty_pages(spark), _empty_links(spark))
-                # an empty round adds nothing to the filter — skip the
-                # full-state checkpoint rewrite (at 10^10-frontier scale
-                # that state is GBs; a 50-round cooldown wait must not
-                # rewrite it 50 times for zero change) UNLESS no snapshot
-                # exists on disk yet (first round of a fresh crawl: the
-                # seed urls live only in the in-memory filter). Resume
-                # falls back to latest_snapshot_round; the in-memory
-                # retraction mutations are reconstructable because the
-                # retraction records retire only after recrawl.
-                rc.finish(disc_empty, frontier, cooldown, bloom, stats,
-                          n_frontier=n_frontier,
-                          write_frontier=(
-                              (rnd % max(1, frontier_snapshot_every)) == 0
-                          ),
-                          write_bloom=not have_bloom_snapshot)
-                have_bloom_snapshot = True
-                scheduled.unpersist()
-                continue
-            scheduled.unpersist()
-            break
-        empty_streak = 0
-
-        # -- simulated fetch ----------------------------------------------
-        fetched = scheduled.join(corpus_slim, "url", "left")
-        fetched = fetched.withColumn(
-            "type",
-            F.when(
-                F.col("_c_ct").contains("text/html"), F.lit("html")
-            ).otherwise(F.lit("error")),
-        ).withColumn(
-            "status", F.coalesce(F.col("_c_status"), F.lit(-100)).cast("int")
-        )
-        fetched = fetched.cache()
-
-        # extracted text per url (the byte-identical per-row invariant) is
-        # fused onto the pages row — one write instead of two; retry_after
-        # rides along so 429-cooldown events come from the written parquet
-        # (driver-side footer read in _commit) instead of a collect job
-        pages_df = fetched.select(
-            "seq", "url", "host", "status", "type",
-            F.when(
-                F.col("type") == "html",
-                F.array_join(extract_text_udf("_c_html"), "\n"),
-            ).alias("text"),
-            F.col("_c_retry").cast("int").alias("retry_after"),
-        )
-
-        # -- link extraction (Arrow-batched pandas UDF) --------------------
-        links = (
-            fetched.where(F.col("type") == "html")
-            .select(
-                "seq",
-                F.col("url").alias("source"),
-                F.col("host").alias("source_host"),
-                F.explode(extract_links_udf("_c_html", "url")).alias("l"),
-            )
-            .select(
-                "seq",
-                "source",
-                "source_host",
-                F.col("l.url").alias("url"),
-                F.col("l.host").alias("host"),
-                F.col("l.link_pos").alias("link_pos"),
-            )
-            .cache()
-        )
-
-        # -- fetch-side writes start NOW, overlapping the discovery work --
-        # pages/links/seen depend only on the scheduled fetch; submitting
-        # them before the sequencing job below means the round's widest
-        # write (pages, which evaluates the text-extraction UDF) runs
-        # concurrently with link filtering + the seen probe + sequencing
-        rc = _RoundCommit(store, rnd, spark, bloom.n_buckets,
-                          job_group=job_group)
-        rc.begin(pages_df, links.drop("seq"))
-
-        try:
-            # -- frontier merge: filter → dedup-first-occurrence → seen ----
-            frontier_rem = frontier.join(
-                scheduled.select("url"), "url", "left_anti"
-            ).select("disc_round", "disc_seq", "url", "host")
-
-            cands = links.where(
-                F.col("url").startswith("http://") | F.col("url").startswith("https://")
-            )
-            if config.limit_to:
-                cands = cands.where(F.col("host") == config.limit_to)
-            if dust_df is not None:
-                # rewrite BEFORE robots (robots judges the fetched URL)
-                # and before the first-occurrence dedup + seen probe, so
-                # known DUST twins collapse onto their canonical form
-                # and never refetch (oracle mirror:
-                # CrawlConfig.dust_canonical)
-                cands = (
-                    apply_dust_rules(cands, dust_df)
-                    .withColumn("url", F.col("canonical_url"))
-                    .drop("canonical_url", "dust_applied")
-                )
-            if config.robots:
-                # only pay the Python round-trip when rules exist (empty rule
-                # set allows everything — robots_allowed() default)
-                cands = cands.where(robots_ok("host", "url"))
-            cands = (
-                cands.groupBy("url", "host")
-                .agg(F.min(F.struct("seq", "link_pos")).alias("_first"))
-                .select(
-                    "url",
-                    "host",
-                    F.col("_first.seq").alias("_src_seq"),
-                    F.col("_first.link_pos").alias("_src_pos"),
-                )
-            )
-
-            # exact re-check build side: the committed url-only seen log,
-            # PRUNED to the bloom-positive buckets (store.read_seen pushes
-            # `bucket IN` into the parquet scan) — the full pages history
-            # never rescans — plus this round's in-flight urls
-            def _seen_hist(buckets, _sched=scheduled, _rem=frontier_rem):
-                return (
-                    store.read_seen(buckets).select("url")
-                    .unionByName(_sched.select("url"))
-                    .unionByName(_rem.select("url"))
-                )
-
-            unseen = bloom.filter_unseen(cands, seen_for_buckets=_seen_hist)
-
+            # -- deterministic global crawl order ------------------------------
+            # default: pure BFS (disc_round, disc_seq) — the reference's FIFO
+            # pop. With host priorities configured (north-rule priority
+            # queue), the order key becomes (priority DESC, BFS): one more
+            # join against the rank table — broadcast-hinted for the dict
+            # feed, AQE-sized for the distributed priority_df feed.
             _t0 = time.perf_counter()
-            # small_hint here is an ESTIMATE, not a tracked bound: scheduled
-            # pages × a generous links-per-page factor. A corpus where a
-            # small round discovers millions of urls degrades to one slow
-            # (still correct) sort task; rounds big enough for that to matter
-            # exceed the threshold and take the range path anyway.
-            seq_disc, n_new = with_global_seq(
-                unseen, ["_src_seq", "_src_pos"], out="disc_seq",
-                return_count=True, small_hint=n_scheduled * 64,
+            order_cols = ["disc_round", "disc_seq"]
+            if prio_df is not None:
+                scheduled = (
+                    scheduled.join(prio_hint(prio_df), "host", "left")
+                    .withColumn(
+                        "_nprio", -F.coalesce(F.col("_hp"), F.lit(0.0))
+                    )
+                    .drop("_hp")
+                )
+                order_cols = ["_nprio", "disc_round", "disc_seq"]
+            # the tracked frontier size is a hard row bound for the schedule —
+            # small rounds take with_global_seq's one-job bounded path, big
+            # rounds (the 10^10-frontier shape) the range-partitioned one
+            scheduled, n_scheduled = with_global_seq(
+                scheduled, order_cols, out="seq",
+                return_count=True, small_hint=n_frontier,
             )
-            phase_t["extract_seen"] = round(time.perf_counter() - _t0, 3)
-            new_disc = (
-                seq_disc.withColumn("disc_round", F.lit(rnd))
-                .select("disc_round", "disc_seq", "url", "host")
+            if prio_df is not None:
+                scheduled = scheduled.drop("_nprio")
+            if config.round_capacity and n_scheduled > config.round_capacity:
+                # global round capacity: keep the top of the priority order;
+                # overflow is never popped, so it stays in the frontier (the
+                # frontier_rem anti-join below only removes scheduled urls)
+                scheduled = scheduled.where(
+                    F.col("seq") < F.lit(config.round_capacity)
+                )
+                n_scheduled = config.round_capacity
+            scheduled = scheduled.cache()
+            phase_t = {"schedule": round(time.perf_counter() - _t0, 3)}
+            if _reload_prev:
+                # end-of-previous-round state reload (committed frontier +
+                # seen-filter re-read) — it prepares THIS round, so it is
+                # this round's fixed cost
+                phase_t["reload"] = _reload_prev
+                _reload_prev = 0.0
+            phase_t["_round_t0"] = _round_t0
+            if n_scheduled == 0:
+                # wait for periodic budgets only while a full period cycle
+                # hasn't yet passed without progress: if max(period)
+                # consecutive non-cooling rounds schedule nothing, every
+                # remaining frontier entry is permanently unschedulable (e.g.
+                # budget 0) and waiting longer only burns empty commits.
+                # Cooling rounds don't consume the period-wait allowance — a
+                # cooldown longer than the period must not starve the host
+                # whose on-round falls right after expiry. Same logic in the
+                # serial oracle (golden-matched).
+                cooling = any(e >= rnd for e in cooldown.values())
+                pending_periodic = (
+                    bool(config.budget_periods)
+                    and empty_streak < max(config.budget_periods.values())
+                )
+                if not cooling:
+                    empty_streak += 1
+                if cooling or pending_periodic:
+                    # everything eligible is cooling, or periodic budgets are
+                    # configured and this may be an off round for what's left
+                    # — commit an empty round so round numbering (and
+                    # cooldown/period cadence) stays resumable.
+                    # Pending seed discoveries commit HERE (otherwise a crash
+                    # during a cooldown stretch would leave them out of the
+                    # discovery log that resume replays). Neither state table
+                    # changed, so neither snapshot is written: at
+                    # 10^10-frontier scale the filter alone is GBs, and a
+                    # 50-round cooldown wait must not rewrite it 50 times.
+                    disc_empty = (
+                        seed_disc
+                        if seed_disc is not None
+                        else spark.createDataFrame([], DISC_SCHEMA)
+                    )
+                    seed_disc = None
+                    rc = _RoundCommit(
+                        store, rnd, spark, bloom.n_buckets, job_group=job_group
+                    )
+                    rc.begin(_empty_pages(spark), _empty_links(spark))
+                    rc.finish(disc_empty, cooldown, stats,
+                              n_frontier=n_frontier)
+                    scheduled.unpersist()
+                    continue
+                scheduled.unpersist()
+                break
+            empty_streak = 0
+
+            # -- simulated fetch ----------------------------------------------
+            fetched = scheduled.join(corpus_slim, "url", "left")
+            fetched = fetched.withColumn(
+                "type",
+                F.when(
+                    F.col("_c_ct").contains("text/html"), F.lit("html")
+                ).otherwise(F.lit("error")),
+            ).withColumn(
+                "status", F.coalesce(F.col("_c_status"), F.lit(-100)).cast("int")
+            )
+            fetched = fetched.cache()
+
+            # extracted text per url (the byte-identical per-row invariant) is
+            # fused onto the pages row — one write instead of two; retry_after
+            # rides along so 429-cooldown events come from the written parquet
+            # (driver-side footer read in _commit) instead of a collect job
+            pages_df = fetched.select(
+                "seq", "url", "host", "status", "type",
+                F.when(
+                    F.col("type") == "html",
+                    F.array_join(extract_text_udf("_c_html"), "\n"),
+                ).alias("text"),
+                F.col("_c_retry").cast("int").alias("retry_after"),
             )
 
-            if seed_disc is not None:
-                disc_to_commit = seed_disc.unionByName(new_disc)
-                seed_disc = None
-            else:
-                disc_to_commit = new_disc
-
-            next_frontier = frontier_rem.unionByName(new_disc)
-            bloom = bloom.add(new_disc.select("url"))
-
-            # -- atomic round commit -------------------------------------------
-            # frontier size tracked arithmetically: previous size minus the
-            # scheduled rows plus this round's new discoveries — no count job
-            n_frontier = n_frontier - n_scheduled + n_new
-            snap = (rnd % max(1, frontier_snapshot_every)) == 0
-            rc.finish(
-                disc_to_commit, next_frontier, cooldown, bloom, stats,
-                n_frontier=n_frontier, config=config, phase_timings=phase_t,
-                write_frontier=snap,
+            # -- link extraction (Arrow-batched pandas UDF) --------------------
+            links = (
+                fetched.where(F.col("type") == "html")
+                .select(
+                    "seq",
+                    F.col("url").alias("source"),
+                    F.col("host").alias("source_host"),
+                    F.explode(extract_links_udf("_c_html", "url")).alias("l"),
+                )
+                .select(
+                    "seq",
+                    "source",
+                    "source_host",
+                    F.col("l.url").alias("url"),
+                    F.col("l.host").alias("host"),
+                    F.col("l.link_pos").alias("link_pos"),
+                )
+                .cache()
             )
-            have_bloom_snapshot = True
-        except BaseException:
-            # drain the fetch-side writers begun above before unwinding —
-            # see _RoundCommit.abort (no manifest was written, so resume
-            # still sees a clean round boundary)
-            rc.abort()
-            raise
 
-        # re-read committed state → bounded lineage across rounds; the
-        # with_global_seq checkpoints free themselves via the
-        # ContextCleaner once these per-round frames are dereferenced
-        frontier.unpersist()
-        scheduled.unpersist()
-        fetched.unpersist()
-        links.unpersist()
-        _t0 = time.perf_counter()
-        if snap:
-            frontier = store.read_snapshot("frontier", rnd, DISC_SCHEMA)
-        else:
-            frontier = store.rebuild_frontier(rnd)
-        frontier = frontier.cache()
-        bloom = _seen_filter_load(
-            spark, store.table_round_path("bloom", rnd), seen_filter,
-            bloom_buckets, bloom_bits, cuckoo_entries,
-        )
-        _reload_prev = round(time.perf_counter() - _t0, 3)
+            # -- fetch-side writes start NOW, overlapping the discovery work --
+            # pages/links/seen depend only on the scheduled fetch; submitting
+            # them before the sequencing job below means the round's widest
+            # write (pages, which evaluates the text-extraction UDF) runs
+            # concurrently with link filtering + the seen probe + sequencing
+            rc = _RoundCommit(store, rnd, spark, bloom.n_buckets,
+                              job_group=job_group)
+            rc.begin(pages_df, links.drop("seq"))
 
-    if priority_df is not None:
-        prio_df.unpersist()
+            try:
+                # -- frontier merge: filter → dedup-first-occurrence → seen ----
+                frontier_rem = frontier.join(
+                    scheduled.select("url"), "url", "left_anti"
+                ).select("disc_round", "disc_seq", "url", "host")
+
+                cands = links.where(
+                    F.col("url").startswith("http://") | F.col("url").startswith("https://")
+                )
+                if config.limit_to:
+                    cands = cands.where(F.col("host") == config.limit_to)
+                if dust_df is not None:
+                    # rewrite BEFORE robots (robots judges the fetched URL)
+                    # and before the first-occurrence dedup + seen probe, so
+                    # known DUST twins collapse onto their canonical form
+                    # and never refetch (oracle mirror:
+                    # CrawlConfig.dust_canonical)
+                    cands = (
+                        apply_dust_rules(cands, dust_df)
+                        .withColumn("url", F.col("canonical_url"))
+                        .drop("canonical_url", "dust_applied")
+                    )
+                if config.robots:
+                    # only pay the Python round-trip when rules exist (empty rule
+                    # set allows everything — robots_allowed() default)
+                    cands = cands.where(robots_ok("host", "url"))
+                cands = (
+                    cands.groupBy("url", "host")
+                    .agg(F.min(F.struct("seq", "link_pos")).alias("_first"))
+                    .select(
+                        "url",
+                        "host",
+                        F.col("_first.seq").alias("_src_seq"),
+                        F.col("_first.link_pos").alias("_src_pos"),
+                    )
+                )
+
+                # exact re-check build side: the committed url-only seen log,
+                # PRUNED to the bloom-positive buckets (store.read_seen pushes
+                # `bucket IN` into the parquet scan) — the full pages history
+                # never rescans — plus this round's in-flight urls
+                def _seen_hist(buckets, _sched=scheduled, _rem=frontier_rem):
+                    return (
+                        store.read_seen(buckets).select("url")
+                        .unionByName(_sched.select("url"))
+                        .unionByName(_rem.select("url"))
+                    )
+
+                unseen = bloom.filter_unseen(cands, seen_for_buckets=_seen_hist)
+
+                _t0 = time.perf_counter()
+                # small_hint here is an ESTIMATE, not a tracked bound: scheduled
+                # pages × a generous links-per-page factor. A corpus where a
+                # small round discovers millions of urls degrades to one slow
+                # (still correct) sort task; rounds big enough for that to matter
+                # exceed the threshold and take the range path anyway.
+                seq_disc, n_new = with_global_seq(
+                    unseen, ["_src_seq", "_src_pos"], out="disc_seq",
+                    return_count=True, small_hint=n_scheduled * 64,
+                )
+                phase_t["extract_seen"] = round(time.perf_counter() - _t0, 3)
+                new_disc = (
+                    seq_disc.withColumn("disc_round", F.lit(rnd))
+                    .select("disc_round", "disc_seq", "url", "host")
+                )
+
+                if seed_disc is not None:
+                    disc_to_commit = seed_disc.unionByName(new_disc)
+                    seed_disc = None
+                else:
+                    disc_to_commit = new_disc
+
+                # -- atomic round commit -------------------------------------------
+                # frontier size tracked arithmetically: previous size minus the
+                # scheduled rows plus this round's new discoveries — no count job
+                n_frontier = n_frontier - n_scheduled + n_new
+                snapshot = None
+                if rnd % max(1, frontier_snapshot_every) == 0:
+                    snapshot = (
+                        frontier_rem.unionByName(new_disc),
+                        bloom.add(new_disc.select("url")),
+                    )
+                rc.finish(
+                    disc_to_commit, cooldown, stats, n_frontier=n_frontier,
+                    config=config, phase_timings=phase_t, snapshot=snapshot,
+                )
+            except BaseException:
+                # drain the fetch-side writers begun above before unwinding —
+                # see _RoundCommit.abort (no manifest was written, so resume
+                # still sees a clean round boundary)
+                rc.abort()
+                raise
+
+            # re-read committed state → bounded lineage across rounds; the
+            # with_global_seq checkpoints free themselves via the
+            # ContextCleaner once these per-round frames are dereferenced
+            frontier.unpersist()
+            scheduled.unpersist()
+            fetched.unpersist()
+            links.unpersist()
+            _t0 = time.perf_counter()
+            frontier, bloom = _load_state(store, rnd, filter_cls, filter_geo)
+            frontier = frontier.cache()
+            _reload_prev = round(time.perf_counter() - _t0, 3)
+    finally:
+        # release everything this call persisted, on every exit path
+        for df in (frontier, scheduled, fetched, links, prio_df):
+            if df is not None:
+                df.unpersist()
     return stats
 
 
@@ -800,17 +777,15 @@ def retract_urls(
     their original discovery records and fetches them one more time.
 
     Writes ONLY the retraction log (``CrawlStore.retract``) — it never
-    touches the committed filter snapshot, so no filter geometry is
-    needed here and there is no non-atomic in-place rewrite to crash
-    through. The resume path applies the filter consequences: under
-    ``seen_filter="cuckoo"`` the pending fingerprints are DELETED at
-    load time (the operation bloom cannot do — a mass recrawl campaign
-    would otherwise leave every retracted url a permanent
-    approximate-filter positive paying the exact-join path forever),
-    resurfaced urls are re-added, and the mutated filter persists
-    through the next round's normal atomic commit. Consumed records
-    retire on the following resume. Returns the retraction watermark
-    round (-1 when nothing was ever committed)."""
+    touches a snapshot, so no filter geometry is needed here and there
+    is no non-atomic in-place rewrite to crash through. The seen filter
+    needs no change under either ``seen_filter``: the filter holds every
+    discovered url, and a retracted url is discovered still — it is back
+    in the frontier — so it must stay a member (a delete would let a
+    link to it during its recrawl round skip the exact re-check and
+    schedule it twice). Consumed records retire on the following resume.
+    Returns the retraction watermark round (-1 when nothing was ever
+    committed)."""
     return CrawlStore(spark, store_root).retract(urls)
 
 
@@ -971,41 +946,31 @@ class _RoundCommit:
     def _finish(
         self,
         disc_df: DataFrame,
-        frontier_df: DataFrame,
         cooldown: dict[str, int],
-        bloom: BloomSeenSet,
         stats: CrawlStats,
         n_frontier: int,
         config: CrawlConfig | None = None,
         phase_timings: dict[str, float] | None = None,
-        write_frontier: bool = True,
-        write_bloom: bool = True,
+        snapshot: tuple[DataFrame, BloomSeenSet] | None = None,
     ) -> None:
+        """``snapshot=(frontier, seen filter)`` also writes both state
+        snapshots for this round; without it, resume replays this
+        round's discoveries onto the newest earlier snapshots."""
         rnd, store = self.rnd, self.store
         f_disc = self._submit(
             "w_discoveries",
             lambda: store.write_round_table("discoveries", rnd, disc_df),
         )
-        f_frontier = (
-            self._submit(
+        if snapshot is not None:
+            frontier_df, seen = snapshot
+            f_frontier = self._submit(
                 "w_frontier",
                 lambda: store.write_round_table("frontier", rnd, frontier_df),
             )
-            if write_frontier
-            else None
-        )
-        # write_bloom=False: empty round, filter unchanged since the last
-        # written checkpoint — resume walks back to it
-        f_bloom = (
-            self._submit(
+            f_bloom = self._submit(
                 "w_bloom",
-                lambda: bloom.checkpoint(
-                    store.table_round_path("bloom", rnd)
-                ),
+                lambda: seen.checkpoint(store.table_round_path("bloom", rnd)),
             )
-            if write_bloom
-            else None
-        )
 
         lineage: dict[str, list[str]] = {}
         lineage["pages"], n_pages = self._f["pages"].result()
@@ -1029,12 +994,11 @@ class _RoundCommit:
         lineage["links"], n_links = self._f["links"].result()
         lineage["seen"], _ = self._f["seen"].result()
         lineage["discoveries"], n_disc = f_disc.result()
-        if f_frontier is not None:
+        lineage["frontier"], lineage["bloom"] = [], []
+        if snapshot is not None:
             lineage["frontier"], _ = f_frontier.result()
-        else:
-            lineage["frontier"] = []  # merge-on-read round, no snapshot
-        if f_bloom is not None:
             f_bloom.result()
+            lineage["bloom"] = ["bloom.parquet"]
         self._pool.shutdown(wait=True)
 
         # cooldown is driver-resident state (a small dict) — pyarrow
@@ -1055,7 +1019,6 @@ class _RoundCommit:
             "cooldown", rnd, cd_pdf, cd_schema
         )
         self.timings["w_cooldown"] = round(time.perf_counter() - t0, 3)
-        lineage["bloom"] = ["bloom.parquet"] if f_bloom is not None else []
 
         timings = dict(phase_timings or {})
         t0 = timings.pop("_round_t0", None)

@@ -8,9 +8,12 @@ us and the driver code would swap to ``df.writeTo(table)`` unchanged):
       pages/round=R/         append-only crawl results (partitioned by round)
       links/round=R/         append-only discovered-link log
       discoveries/round=R/   append-only frontier-discovery log
-      frontier/round=R/      frontier snapshot AFTER round R committed
+      seen/round=R/          append-only url-only seen log (bucket-sorted)
+      frontier/round=R/      frontier snapshot after round R (snapshot rounds)
+      bloom/round=R/         seen-filter snapshot after round R (same rounds)
       cooldown/round=R/      cooldown snapshot after round R
-      bloom/round=R/         bloom seen-set snapshot after round R
+      retractions/           pending recrawl marks (``retract``)
+      filter_geometry.json   seen-filter kind and size, fixed at crawl start
       manifests/round-R.json commit marker — written LAST, atomically
 
 A round is visible iff its manifest exists (rename is atomic on a posix
@@ -21,12 +24,15 @@ deletes any orphaned dirs from a crashed round, so re-running a round is
 idempotent — this replaces the reference's ``processing:true`` in-flight
 flags + ``cleanup()`` crash recovery (``storage.ts:182-188, 236-248``).
 
-Scale note: the frontier snapshot is rewritten per round for simplicity
-and fast resume; at 10^10-frontier scale the same store supports
-merge-on-read — ``frontier = discoveries ≤ R anti-join pages ≤ R`` (both
-sides hash-partitioned on ``xxhash64(url)``) — with periodic snapshot
-compaction; ``rebuild_frontier`` implements that path and the resume test
-exercises it.
+Crawl state is persisted one way for both state tables: a snapshot on
+every ``frontier_snapshot_every``-th round that crawled something, and
+between snapshots nothing but the append-only logs. A reader rebuilds
+either table as of round R from its newest snapshot C <= R plus a
+replay of the discovery log written after C (the frontier also drops
+the pages crawled after C) — ``latest_snapshot_round`` and
+``discoveries_after`` are the pieces. ``rebuild_frontier`` is the same
+replay from an empty start: the whole ``discoveries ≤ R anti-join
+pages ≤ R``, both sides hash-partitioned on ``xxhash64(url)`` at scale.
 """
 
 from __future__ import annotations
@@ -172,17 +178,17 @@ class CrawlStore:
         os.replace(tmp, self._geometry_path())
 
     def read_filter_geometry(self) -> dict[str, Any] | None:
-        """None for stores created before geometry recording."""
+        """None when the store has no geometry file: a store written
+        before geometry recording, which resume refuses."""
         if not os.path.exists(self._geometry_path()):
             return None
         with open(self._geometry_path()) as f:
             return json.load(f)
 
     def latest_snapshot_round(self, table: str, upto: int) -> int | None:
-        """Newest round ≤ ``upto`` with a snapshot dir for ``table`` —
-        resume's fallback for tables whose snapshot a round may
-        legitimately skip (interval-snapshotted frontier, unchanged
-        seen filter on an empty round)."""
+        """Newest round ≤ ``upto`` with a snapshot dir for ``table``
+        (None if there is none) — where a state reload starts its log
+        replay; snapshots are written only on some rounds."""
         tdir = os.path.join(self.root, table)
         if not os.path.isdir(tdir):
             return None
@@ -212,15 +218,14 @@ class CrawlStore:
             if os.path.exists(wm_tmp):
                 os.remove(wm_tmp)
             wm, gen = self._compaction_state(table)
-            # no watermark ⇒ no segment is live: an orphan '_compacted'
-            # dir from a compaction that crashed before its watermark
-            # commit must be cleaned, not treated as generation 0
+            # no watermark ⇒ no segment is live: an orphan segment dir
+            # from a compaction that crashed before its watermark commit
+            # must be cleaned
             live = self._segment_dir(table, gen) if wm >= 0 else None
             for name in os.listdir(tdir):
                 # drop every segment dir (any generation, committed or
-                # .tmp, incl. the legacy un-generationed layout) the
-                # watermark does not reference — an uncommitted compaction
-                # leaves only unreferenced dirs behind
+                # .tmp) the watermark does not reference — an uncommitted
+                # compaction leaves only unreferenced dirs behind
                 if name.startswith("_compacted") and not name.endswith(
                     ".json"
                 ):
@@ -244,10 +249,6 @@ class CrawlStore:
         return os.path.join(self.root, table, "_compacted.json")
 
     def _segment_dir(self, table: str, generation: int) -> str:
-        # generation 0 is the legacy un-generationed layout — a store
-        # compacted before the generation protocol keeps reading/upgrading
-        if generation == 0:
-            return os.path.join(self.root, table, "_compacted")
         return os.path.join(self.root, table, f"_compacted-g{generation}")
 
     def _compaction_state(self, table: str) -> tuple[int, int]:
@@ -259,7 +260,7 @@ class CrawlStore:
             return -1, 0
         with open(path) as f:
             state = json.load(f)
-        return int(state["upto_round"]), int(state.get("generation", 0))
+        return int(state["upto_round"]), int(state["generation"])
 
     def compaction_watermark(self, table: str) -> int:
         """Highest round folded into the compacted segment (-1 if none)."""
@@ -337,10 +338,10 @@ class CrawlStore:
         than the NEWEST snapshot each table actually has at or below
         ``last_round`` — only that one is needed to resume; history lives
         in the append-only logs + manifests. Per-table, not a blanket
-        ``< last_round``: interval-snapshotted frontiers and skip-if-
-        unchanged seen-filter checkpoints legitimately have no dir at
-        ``last_round``, and pruning their newest earlier snapshot would
-        orphan the resume path."""
+        ``< last_round``: frontier and filter snapshots are written only
+        on snapshot rounds that crawled something, so ``last_round`` may
+        have none, and resume replays the log onto the newest earlier
+        one."""
         for table in ("frontier", "cooldown", "bloom"):
             tdir = os.path.join(self.root, table)
             if not os.path.isdir(tdir):
@@ -434,11 +435,11 @@ class CrawlStore:
         seen again — retraction is one extra crawl, not a permanent hole.
 
         The exact seen re-check is the authority, so this works under
-        either seen filter; with ``seen_filter="cuckoo"`` the driver-level
-        ``retract_urls`` additionally deletes the filter fingerprints so a
-        mass recrawl campaign does not leave every retracted url a
-        permanent approximate-filter positive (bloom cannot delete — each
-        retracted url would pay the exact-join path forever).
+        either seen filter, and neither filter changes: a retracted url
+        is back in the frontier, i.e. discovered, and the filter must
+        keep every discovered url so that a link to it during its
+        recrawl round takes the exact re-check instead of scheduling it
+        twice.
 
         Appends a (url, upto_round) parquet to ``retractions/`` — tiny,
         driver-side, broadcast at read time. Returns upto_round."""
@@ -576,8 +577,16 @@ class CrawlStore:
         return self._read_all("links", LINKS_SCHEMA)
 
     def read_discoveries(self) -> DataFrame:
-        return self._read_all("discoveries", DISC_SCHEMA + ", round int").drop(
-            "round"
+        return self.discoveries_after(-1)
+
+    def discoveries_after(self, rnd: int) -> DataFrame:
+        """Discovery-log rows committed in rounds after ``rnd`` — what a
+        snapshot taken at ``rnd`` does not hold. Seeds are committed with
+        the first round, so ``rnd=-1`` is the whole log."""
+        return (
+            self._read_all("discoveries", DISC_SCHEMA + ", round int")
+            .where(F.col("round") > rnd)
+            .drop("round")
         )
 
     def read_snapshot(self, table: str, rnd: int, schema: str) -> DataFrame:
@@ -586,32 +595,11 @@ class CrawlStore:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.parquet(path)
 
-    def backfill_seen(self, n_buckets: int, last_round: int) -> bool:
-        """One-time upgrade path: a store whose rounds were committed
-        before the url-only seen log existed gets the whole pages history
-        folded into ``seen/round=<last_round>`` — resuming such a store
-        must not silently treat crawled urls as unseen."""
-        sdir = os.path.join(self.root, "seen")
-        has_any = os.path.isdir(sdir) and any(
-            n.startswith(("round=", "_compacted")) for n in os.listdir(sdir)
-        )
-        if has_any:
-            return False
-        seen = self.read_pages().select(
-            F.pmod(F.xxhash64("url"), F.lit(n_buckets))
-            .cast("int")
-            .alias("bucket"),
-            "url",
-        ).sortWithinPartitions("bucket")
-        self.write_round_table("seen", last_round, seen)
-        return True
-
     def rebuild_frontier(self, upto_round: int) -> DataFrame:
-        """Merge-on-read frontier: discoveries minus crawled pages.
-
-        The scale path — equivalent to the ``frontier/round=R`` snapshot
-        (asserted by tests/test_resume.py) without rewriting the frontier
-        each round.
+        """Merge-on-read frontier: discoveries minus crawled pages — the
+        replay from an empty start, for a store with no frontier
+        snapshot or with pending retractions. Equal to the
+        ``frontier/round=R`` snapshot (asserted by tests/test_resume.py).
         """
         disc = self.read_discoveries()
         pages = self._minus_retracted(

@@ -17,9 +17,11 @@ eviction chains, and DELETION all work from the fingerprint alone.
 
 Why have both: bloom is smaller per key and its ``add`` is an embarrass-
 ingly-parallel OR — right for the append-only crawl seen set. Cuckoo
-supports deletes (forget a url to allow recrawl) and bounded lookups at
-~the same FP rate — right for mutable membership like retraction-aware
-corpus registries. Same interface, swappable.
+supports deletes and bounded lookups at ~the same FP rate — right for
+mutable membership like corpus registries. The crawl itself never
+deletes: a retracted url (``driver.retract_urls``) resurfaces in the
+frontier, so it is still discovered and stays a member under either
+filter. Same interface, swappable.
 """
 
 from __future__ import annotations

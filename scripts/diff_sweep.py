@@ -7,7 +7,9 @@ random combination of every scheduler knob the engine exposes —
 priority ranks, round capacity, global Hamilton budget, periodic
 budgets, DUST rewrite rules, ``limit_to`` host gates, non-default
 ``round_seconds`` (cooldown TTL conversion), bloom vs cuckoo seen
-filter, and a mid-crawl kill + resume — then runs the Spark crawl and
+filter, a mid-crawl kill + resume, and the state-snapshot cadence
+``frontier_snapshot_every`` in {1, 2, 3} (drawn last, so adding it
+left every earlier trial's composition unchanged) — then runs the Spark crawl and
 the pure-Python oracle and requires EXACT equality of (a) the crawl
 order table (round, seq, url, host, status, type), (b) the seen set,
 (c) per-url extracted text bytes, and (d) the links table.
@@ -16,14 +18,18 @@ The per-knob golden tests (tests/test_crawl_golden.py) pin each signal
 alone and tests/test_pipeline_e2e.py pins one full composition; this
 sweep searches the composition SPACE. It found the webgen totality bug
 (seed list indexing a host the random draw missed). Deterministic in
-(N, BASE): the round-5 evidence run was 64 trials over bases
-9000/17000/15000/21000 — 0 failures.
+(N, BASE): the round-5 evidence run was 68 trials over bases
+9000/17000/15000/21000, i.e. the default 16 trials on three bases and
+20 on one (the record does not say which) — 0 failures.
 
 Usage:  python scripts/diff_sweep.py [N_TRIALS] [SEED_BASE]
+Each trial's crawl store lives in a temporary directory that is removed
+when the trial ends.
 Exits non-zero on any divergence.
 """
 import os
 import random
+import shutil
 import sys
 import tempfile
 
@@ -42,7 +48,7 @@ from crawler_spark.oracle.crawloracle import (  # noqa: E402
 
 def random_trial_config(w, rng):
     """One random knob composition over mini-web ``w``. Returns
-    (CrawlConfig kwargs, seen_filter, resume_at_round, mode tags)."""
+    (CrawlConfig kwargs, run_crawl kwargs, resume_at_round, mode tags)."""
     hosts = sorted(set(w.pages.url.map(lambda u: u.split("/")[2])))
     budgets = {
         r.host: int(r.budget_per_round) for r in w.politeness.itertuples()
@@ -98,28 +104,43 @@ def random_trial_config(w, rng):
     resume_at = rng.randint(1, 4) if rng.random() < 0.35 else 0
     if resume_at:
         mode.append(f"kill@{resume_at}")
-    return kw, sf, resume_at, mode
+    every = rng.choice([1, 2, 3])
+    if every > 1:
+        mode.append(f"snap/{every}")
+    crawl_kw = dict(bloom_buckets=8, bloom_bits=1 << 16, seen_filter=sf,
+                    frontier_snapshot_every=every)
+    return kw, crawl_kw, resume_at, mode
 
 
-def run_trial(spark, i, base):
-    from tests.test_crawl_golden import _to_spark_corpus
-
+def run_trial(spark, i, base, root_dir=None):
+    """Run trial ``i`` of seed base ``base`` in a fresh store under
+    ``root_dir`` (the system temp dir by default); the store is removed
+    when the trial ends. Returns (checks, mode tags, pages crawled)."""
     rng = random.Random(base * 3 + i)
     w = generate(seed=base + i, n_pages=rng.randint(50, 140))
-    kw, sf, resume_at, mode = random_trial_config(w, rng)
+    kw, crawl_kw, resume_at, mode = random_trial_config(w, rng)
+    root = tempfile.mkdtemp(prefix=f"diffsweep_{base}_{i}_", dir=root_dir)
+    try:
+        checks, pages = _check_trial(spark, w, kw, crawl_kw, resume_at, root)
+        return checks, mode, pages
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _check_trial(spark, w, kw, crawl_kw, resume_at, root):
+    from tests.test_crawl_golden import _to_spark_corpus
+
     cfg = CrawlConfig(**kw)
     seeds = w.seeds.url.tolist()
     oracle = crawl_oracle(w.pages, seeds, cfg)
-    root = tempfile.mkdtemp(prefix=f"diffsweep_{base}_{i}_")
     corpus = _to_spark_corpus(spark, w.pages)
-    common = dict(bloom_buckets=8, bloom_bits=1 << 16, seen_filter=sf)
     if resume_at:
         run_crawl(spark, corpus, seeds,
                   CrawlConfig(**{**kw, "max_rounds": resume_at}),
-                  root, **common)
-        run_crawl(spark, corpus, seeds, cfg, root, resume=True, **common)
+                  root, **crawl_kw)
+        run_crawl(spark, corpus, seeds, cfg, root, resume=True, **crawl_kw)
     else:
-        run_crawl(spark, corpus, seeds, cfg, root, **common)
+        run_crawl(spark, corpus, seeds, cfg, root, **crawl_kw)
     store = CrawlStore(spark, root)
     got = (
         store.read_pages().toPandas()
@@ -143,7 +164,7 @@ def run_trial(spark, i, base):
     checks["links"] = sorted(
         map(tuple, store.read_links().toPandas()[lcols].itertuples(index=False))
     ) == sorted(map(tuple, oracle.links[lcols].itertuples(index=False)))
-    return checks, mode, len(got)
+    return checks, len(got)
 
 
 def main():

@@ -144,8 +144,10 @@ def main() -> None:
                     help="--dust-mine: drop rules observed on fewer "
                          "content-equal pairs than this")
     ap.add_argument("--snapshot-every", type=int, default=1,
-                    help="write the frontier snapshot every N rounds "
-                         "(merge-on-read between)")
+                    help="write the frontier and seen-filter snapshots "
+                         "every N rounds; resume and the per-round "
+                         "reload replay the discovery log onto the "
+                         "newest snapshot")
     ap.add_argument("--write-partitions", type=int, default=8,
                     help="files per round table; 0 = natural partitioning")
     args = ap.parse_args()

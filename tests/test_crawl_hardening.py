@@ -1,8 +1,9 @@
-"""Hardening regressions from the round-5 core review: filter-geometry
-validation on resume, fresh-crawl refusal over a used store, skipped
-seen-filter checkpoints on empty rounds, snapshot pruning that keeps the
+"""Hardening regressions: filter-geometry validation on resume (and
+refusal of stores without it), fresh-crawl refusal over a used store,
+no state snapshots on empty rounds, snapshot pruning that keeps the
 newest EXISTING snapshot, bucket-sorted seen compaction, the cuckoo
-entry/bucket hash decorrelation, and the deterministic top-k salt."""
+entry/bucket hash decorrelation, the deterministic top-k salt, and a
+run_crawl that leaves nothing persisted."""
 
 import os
 
@@ -83,11 +84,11 @@ def test_resume_rejects_geometry_mismatch(spark, tmp_path):
 
 
 def test_empty_rounds_skip_bloom_checkpoint_and_resume(spark, tmp_path):
-    """Cooldown (empty) rounds add nothing to the seen filter, so they
-    must not rewrite the full filter checkpoint (GBs at scale); a resume
-    whose LAST committed round is such a round walks back to the newest
-    written checkpoint and continues identically to an uninterrupted
-    run."""
+    """Cooldown (empty) rounds change neither the seen filter nor the
+    frontier, so they write neither snapshot (the filter is GBs at
+    scale); a resume whose LAST committed round is such a round starts
+    from the newest written snapshots and continues identically to an
+    uninterrupted run."""
     corpus = _tiny_corpus(spark)
     cfg = dict(budgets={"*": 1})
     # round 0 fetches the 429 seed -> host cools for rounds 1-2 (empty);
@@ -99,9 +100,11 @@ def test_empty_rounds_skip_bloom_checkpoint_and_resume(spark, tmp_path):
     assert store.committed_rounds() == [0, 1, 2]
     assert store.read_manifest(0)["lineage"]["bloom"] == ["bloom.parquet"]
     for rnd in (1, 2):
-        assert store.read_manifest(rnd)["lineage"]["bloom"] == []
-        assert not os.path.isdir(store.table_round_path("bloom", rnd))
+        for table in ("bloom", "frontier"):
+            assert store.read_manifest(rnd)["lineage"][table] == []
+            assert not os.path.isdir(store.table_round_path(table, rnd))
     assert store.latest_snapshot_round("bloom", 2) == 0
+    assert store.latest_snapshot_round("frontier", 2) == 0
 
     run_crawl(spark, corpus, SEEDS, CrawlConfig(max_rounds=6, **cfg),
               root, bloom_buckets=4, bloom_bits=1 << 14, resume=True)
@@ -126,12 +129,68 @@ def test_empty_rounds_skip_bloom_checkpoint_and_resume(spark, tmp_path):
     assert sorted(got.url) == sorted(SEEDS)
 
 
+def test_resume_refuses_store_without_filter_geometry(spark, tmp_path):
+    """A store without filter_geometry.json predates geometry recording
+    (and the seen log and compaction layout resume relies on): resume
+    refuses it with a clear error instead of upgrading it."""
+    corpus = _tiny_corpus(spark)
+    root = str(tmp_path / "store")
+    run_crawl(spark, corpus, ["http://a.test/p2"],
+              CrawlConfig(budgets={"*": 10}, max_rounds=1), root,
+              bloom_buckets=4, bloom_bits=1 << 14)
+    os.remove(os.path.join(root, "filter_geometry.json"))
+    with pytest.raises(ValueError, match="no filter_geometry.json"):
+        run_crawl(spark, corpus, ["http://a.test/p2"],
+                  CrawlConfig(budgets={"*": 10}, max_rounds=2), root,
+                  bloom_buckets=4, bloom_bits=1 << 14, resume=True)
+
+
+def test_run_crawl_leaves_nothing_persisted(spark, tmp_path):
+    """A long-lived driver may call run_crawl many times: each call must
+    release every frame it persisted (the frontier, the round frames,
+    a priority_df feed), so two calls add no persisted RDD."""
+    import gc
+    import time
+
+    corpus = _tiny_corpus(spark)
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keys())
+
+    def live_ids():
+        # the SparkContext's weak-valued registry, read as a string: the
+        # map getPersistentRDDs returns holds its RDDs strongly, so
+        # polling with it would keep them alive through every GC
+        keys = jsc.sc().persistentRdds().keys().mkString(",")
+        return {int(k) for k in str(keys).split(",") if k}
+
+    before = persisted()
+    prio = spark.createDataFrame(
+        [("a.test", 1.0)], "host string, priority double"
+    )
+    for i, kw in enumerate(({}, {"priority_df": prio})):
+        run_crawl(spark, corpus, SEEDS,
+                  CrawlConfig(budgets={"*": 1}, max_rounds=2),
+                  str(tmp_path / f"s{i}"), bloom_buckets=4,
+                  bloom_bits=1 << 14, **kw)
+    # localCheckpoint blocks are released by the ContextCleaner once the
+    # JVM collects their datasets
+    for _ in range(30):
+        gc.collect()
+        spark._jvm.System.gc()
+        if live_ids() <= before:
+            break
+        time.sleep(1)
+    assert persisted() - before == set()
+
+
 def test_prune_snapshots_keeps_newest_existing(spark, tmp_path):
     """prune_snapshots(last) must keep each table's newest snapshot AT OR
-    BELOW last, not blindly delete everything < last: interval-
-    snapshotted frontiers and skip-if-unchanged filter checkpoints
-    legitimately have no dir at `last`, and deleting their newest
-    earlier snapshot would orphan resume."""
+    BELOW last, not blindly delete everything < last: off-cadence and
+    empty rounds legitimately have no frontier or filter snapshot, and
+    deleting the newest earlier one would make resume replay more of
+    the log."""
     corpus = _tiny_corpus(spark)
     root = str(tmp_path / "store")
     run_crawl(spark, corpus, SEEDS, CrawlConfig(max_rounds=3,

@@ -126,11 +126,8 @@ def test_bucketed_corpus_crawl_matches_plain(spark, web, tmp_path):
 
 def test_resume_with_wrong_filter_type_fails_clearly(spark, web, tmp_path):
     """Resuming a bloom store with seen_filter='cuckoo' must raise a
-    clear ValueError at load, not an opaque cogroup/schema error later.
-    Since the geometry-file hardening this is caught by the
-    filter_geometry.json validation (which names both geometries); the
-    older per-table check at driver.py:205 still covers legacy stores
-    written before the geometry file existed."""
+    clear ValueError at load, not an opaque cogroup/schema error later:
+    the filter_geometry.json validation names both geometries."""
     corpus = _to_spark_corpus(spark, web.pages)
     seeds = web.seeds.url.tolist()
     root = str(tmp_path / "mismatch")

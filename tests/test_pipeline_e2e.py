@@ -271,7 +271,7 @@ def test_all_signals_resumed_session_golden(spark, tmp_path):
         assert n == (2 if u in due else 1), (u, n)
 
 
-def test_randomized_composed_config_differential(spark):
+def test_randomized_composed_config_differential(spark, tmp_path):
     """One pinned trial of the randomized differential sweep
     (scripts/diff_sweep.py): a DENSE random composition — DUST rewrite
     + per-round capacity + cuckoo seen filter + mid-crawl kill/resume
@@ -291,7 +291,7 @@ def test_randomized_composed_config_differential(spark):
     import sys as _sys
     _sys.modules["diff_sweep"] = ds
     spec.loader.exec_module(ds)
-    checks, mode, pages = ds.run_trial(spark, 0, 21000)
+    checks, mode, pages = ds.run_trial(spark, 0, 21000, str(tmp_path))
     assert "kill@2" in mode and "cuckoo" in mode  # the composition we pinned
     assert pages > 0
     assert all(checks.values()), checks

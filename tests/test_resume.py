@@ -7,6 +7,7 @@ no manifest — ``resume_round`` must discard them.
 """
 
 import os
+import shutil
 
 import pandas as pd
 import pytest
@@ -47,15 +48,21 @@ def _final_state(store):
     return pages, text
 
 
-def test_interrupt_resume_byte_equal(spark, web, tmp_path):
+@pytest.fixture(scope="module")
+def uninterrupted(spark, web, tmp_path_factory):
+    """(final state, committed rounds) of the uninterrupted crawl, with
+    both snapshots written every round."""
+    corpus = _to_spark_corpus(spark, web.pages)
+    root = str(tmp_path_factory.mktemp("every1"))
+    run_crawl(spark, corpus, web.seeds.url.tolist(), _cfg(web), root,
+              bloom_buckets=4, bloom_bits=1 << 15)
+    store = CrawlStore(spark, root)
+    return _final_state(store), store.committed_rounds()
+
+
+def test_interrupt_resume_byte_equal(spark, web, tmp_path, uninterrupted):
     corpus = _to_spark_corpus(spark, web.pages)
     seeds = web.seeds.url.tolist()
-
-    # uninterrupted run
-    root_a = str(tmp_path / "full")
-    run_crawl(spark, corpus, seeds, _cfg(web), root_a, bloom_buckets=4,
-              bloom_bits=1 << 15)
-    store_a = CrawlStore(spark, root_a)
 
     # interrupted after 4 rounds …
     root_b = str(tmp_path / "resumed")
@@ -74,8 +81,8 @@ def test_interrupt_resume_byte_equal(spark, web, tmp_path):
     run_crawl(spark, corpus, seeds, _cfg(web), root_b, bloom_buckets=4,
               bloom_bits=1 << 15, resume=True)
 
-    assert _final_state(store_b) == _final_state(store_a)
-    assert store_b.committed_rounds() == store_a.committed_rounds()
+    assert _final_state(store_b) == uninterrupted[0]
+    assert store_b.committed_rounds() == uninterrupted[1]
 
 
 def test_merge_on_read_frontier_equals_snapshot(spark, web, tmp_path):
@@ -97,29 +104,39 @@ def test_merge_on_read_frontier_equals_snapshot(spark, web, tmp_path):
     )
 
 
-def test_frontier_snapshot_interval_equal_and_resumable(spark, web, tmp_path):
-    """frontier_snapshot_every=3: identical crawl result, and resuming
-    from a round WITHOUT a frontier snapshot rebuilds it from the logs."""
+def test_frontier_snapshot_interval_equal_and_resumable(
+    spark, web, tmp_path, uninterrupted
+):
+    """frontier_snapshot_every=3, under both seen filters: the frontier
+    and filter snapshots exist only on snapshot rounds, and a crawl
+    killed one, two and zero rounds after a snapshot — then once more
+    after losing every filter snapshot — resumes to the uninterrupted
+    result by replaying the discovery log onto the newest snapshot."""
     corpus = _to_spark_corpus(spark, web.pages)
     seeds = web.seeds.url.tolist()
+    for seen_filter in ("bloom", "cuckoo"):
+        kw = dict(bloom_buckets=4, bloom_bits=1 << 15,
+                  cuckoo_entries=1 << 12, seen_filter=seen_filter,
+                  frontier_snapshot_every=3)
+        root = str(tmp_path / seen_filter)
+        store = CrawlStore(spark, root)
+        # killed after rounds 4, 5 and 6: 1, 2 and 0 rounds past a snapshot
+        for i, max_rounds in enumerate((5, 6, 7)):
+            run_crawl(spark, corpus, seeds, _cfg(web, max_rounds=max_rounds),
+                      root, resume=i > 0, **kw)
+        assert store.committed_rounds() == list(range(7))
+        for rnd in range(7):
+            snap = rnd % 3 == 0
+            for table in ("frontier", "bloom"):
+                assert os.path.isdir(store.table_round_path(table, rnd)) == snap
+                assert (store.read_manifest(rnd)["lineage"][table] != []) == snap
 
-    root_a = str(tmp_path / "every1")
-    run_crawl(spark, corpus, seeds, _cfg(web), root_a, bloom_buckets=4,
-              bloom_bits=1 << 15)
-    store_a = CrawlStore(spark, root_a)
-
-    root_b = str(tmp_path / "every3")
-    run_crawl(spark, corpus, seeds, _cfg(web, max_rounds=5), root_b,
-              bloom_buckets=4, bloom_bits=1 << 15,
-              frontier_snapshot_every=3)
-    store_b = CrawlStore(spark, root_b)
-    # round 4 committed without a frontier snapshot (only rounds 0, 3)
-    assert not os.path.isdir(store_b.table_round_path("frontier", 4))
-    assert store_b.read_manifest(4)["lineage"]["frontier"] == []
-
-    run_crawl(spark, corpus, seeds, _cfg(web), root_b, bloom_buckets=4,
-              bloom_bits=1 << 15, resume=True, frontier_snapshot_every=3)
-    assert _final_state(store_b) == _final_state(store_a)
+        # without any filter snapshot, resume replays the whole log onto
+        # an empty filter
+        shutil.rmtree(os.path.join(root, "bloom"))
+        run_crawl(spark, corpus, seeds, _cfg(web), root, resume=True, **kw)
+        assert _final_state(store) == uninterrupted[0], seen_filter
+        assert store.committed_rounds() == uninterrupted[1]
 
 
 def test_round_commit_abort_drains_writers_no_manifest(spark, tmp_path):

@@ -232,62 +232,6 @@ def test_compaction_crash_before_watermark_commit(spark):
     assert sorted(map(tuple, store2.read_pages().collect())) == before
 
 
-def test_legacy_compaction_layout_reads_and_upgrades(spark):
-    """A store compacted under the old (un-generationed) protocol —
-    '_compacted' dir + watermark without a generation field — must read
-    identically and upgrade cleanly on the next compact()."""
-    import json
-
-    from crawler_spark.crawl.store import PAGES_FILE_SCHEMA, CrawlStore
-
-    store, _, _, root = _crawled_store(spark, max_rounds=4)
-    rounds = store.committed_rounds()
-    before = sorted(map(tuple, store.read_pages().collect()))
-    store.compact("pages", PAGES_FILE_SCHEMA, upto_round=rounds[1])
-
-    # rewrite to the legacy on-disk shape
-    pdir = os.path.join(root, "pages")
-    os.rename(os.path.join(pdir, "_compacted-g1"),
-              os.path.join(pdir, "_compacted"))
-    wm = os.path.join(pdir, "_compacted.json")
-    with open(wm) as f:
-        upto = json.load(f)["upto_round"]
-    with open(wm, "w") as f:
-        json.dump({"upto_round": upto}, f)
-
-    legacy = CrawlStore(spark, root)
-    assert legacy.resume_round() == rounds[-1]
-    assert sorted(map(tuple, legacy.read_pages().collect())) == before
-    # upgrade: next compact moves to generation 1 and removes the legacy dir
-    legacy.compact("pages", PAGES_FILE_SCHEMA, upto_round=rounds[-1])
-    assert not os.path.isdir(os.path.join(pdir, "_compacted"))
-    assert os.path.isdir(os.path.join(pdir, "_compacted-g1"))
-    assert sorted(map(tuple, legacy.read_pages().collect())) == before
-
-
-def test_backfill_seen_for_pre_upgrade_store(spark):
-    """A store with no url-only seen log (written before it existed) gets
-    it rebuilt from pages history on resume, so re-checks stay exact."""
-    import shutil as sh
-
-    from crawler_spark.crawl.store import CrawlStore
-
-    store, _, _, root = _crawled_store(spark, max_rounds=3)
-    last = store.committed_rounds()[-1]
-    want = sorted(r.url for r in store.read_pages().select("url").collect())
-    sh.rmtree(os.path.join(root, "seen"))
-
-    store2 = CrawlStore(spark, root)
-    assert store2.backfill_seen(8, last)
-    got = store2.read_seen()
-    assert sorted(r.url for r in got.select("url").collect()) == want
-    # bucket pruning returns exactly the rows of those buckets
-    some = got.where("bucket IN (0, 3)").count()
-    assert store2.read_seen([0, 3]).count() == some
-    # idempotent: second call is a no-op
-    assert not store2.backfill_seen(8, last)
-
-
 def test_parse_entries_lastmod_paired_within_blocks():
     from crawler_spark.functions.sitemaps import parse_sitemap_entries
 
