@@ -403,7 +403,7 @@ def _bench_curation(spark, replicate: int | None = None) -> dict:
 
 def _bench_frontier(spark, n_urls: int) -> dict:
     """One crawl round's FRONTIER-side operators over a synthetic n-URL
-    frontier: cooldown anti-join → per-host budget top-k (salted) →
+    frontier: cooldown filter + per-host budget join → top-k (salted) →
     global crawl order → bloom-prefiltered discovery dedup → frontier
     merge (min-struct first-occurrence). No fetch/extract — this
     isolates the work whose cost is governed by frontier SIZE, which is
@@ -412,7 +412,8 @@ def _bench_frontier(spark, n_urls: int) -> dict:
     per-URL cost means the frontier ops are data-bound (linear), so a
     10^10-row frontier is an executor-count problem, not an algorithmic
     one. Uses the same operators the driver round loop calls
-    (``topk_per_group``, ``with_global_seq``, ``filter_unseen_via``).
+    (``eligible_frontier``, ``topk_per_group``, ``with_global_seq``,
+    ``filter_unseen_via``).
 
     URL universe: id → ``http://h{hash(id)%n_hosts}.frontier.test/p{id}``
     with a hot host taking ~10% of ids (the skew the salted top-k
@@ -425,8 +426,10 @@ def _bench_frontier(spark, n_urls: int) -> dict:
     multi-row groups."""
     from pyspark.sql import functions as F
 
+    from crawler_spark.crawl.driver import budget_table, eligible_frontier
     from crawler_spark.operators.seen import BloomSeenSet, filter_unseen_via
     from crawler_spark.operators.topk import topk_per_group, with_global_seq
+    from crawler_spark.oracle.crawloracle import CrawlConfig
 
     n_hosts = max(64, n_urls // 256)
 
@@ -471,21 +474,16 @@ def _bench_frontier(spark, n_urls: int) -> dict:
     ).cache()
     n_disc = discoveries.count()
 
-    cooldown = spark.createDataFrame(
-        [(f"h{i}.frontier.test",) for i in range(1, 6)], "host string"
-    )
-    budgets = spark.createDataFrame(
-        [("h0.frontier.test", 2048)], "host string, _bk int"
-    )
+    # five hosts cooling this round; the hot host gets a larger budget
+    cooldown = {f"h{i}.frontier.test": 0 for i in range(1, 6)}
+    config = CrawlConfig(budgets={"*": 64, "h0.frontier.test": 2048})
+    budgets = budget_table(spark, config)  # built once per crawl
 
     t0 = time.perf_counter()
-    eligible = frontier.join(F.broadcast(cooldown), "host", "left_anti")
-    eligible = eligible.join(F.broadcast(budgets), "host", "left").withColumn(
-        "_k", F.coalesce(F.col("_bk"), F.lit(64))
-    )
+    eligible = eligible_frontier(frontier, config, cooldown, 0, budgets)
     scheduled = topk_per_group(
         eligible, ["host"], ["disc_round", "disc_seq"], F.col("_k"), salt=8
-    ).drop("_bk", "_k", "_rank")
+    ).drop("_k", "_rank")
     scheduled, n_sched = with_global_seq(
         scheduled, ["disc_round", "disc_seq"], out="seq", return_count=True
     )

@@ -5,7 +5,8 @@ driver, ``storage.ts:137-200`` pop, ``page.ts:136-219`` fetch/extract,
 ``storage.ts:82-112`` queue update, ``workers/crawler.ts:21-32`` cooldown)
 as iterative batch rounds. Each round:
 
-    frontier ──anti-join── cooldown (broadcast, tiny)
+    frontier ──isin── drop cooling hosts (hash-set filter, no join)
+             ──broadcast join── per-host budget table (built once per crawl)
              ──topk_per_group── per-host politeness budget (skew-salted)
              ──with_global_seq── deterministic (round, seq) crawl order
                  (priority queue: host-rank broadcast join + global
@@ -25,8 +26,9 @@ seen set, link table, cooldown events and extracted text.
 
 Every per-row operation is a vectorized pandas UDF; all joins are
 hash/broadcast joins; the two global orderings use the scalable
-``with_global_seq`` (no single-partition window). Cooldown and politeness
-tables are broadcast-sized by construction (one row per host).
+``with_global_seq`` (no single-partition window). Cooldowns are a
+driver-side ``isin`` filter; per-host budgets are a broadcast table
+rebuilt only when periodic budgets change it (``eligible_frontier``).
 """
 
 from __future__ import annotations
@@ -53,6 +55,10 @@ from crawler_spark.oracle.crawloracle import (
     DEFAULT_COOLDOWN_SECONDS,
     CrawlConfig,
 )
+
+
+_JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel")  # what setJobGroup sets
 
 
 @dataclass
@@ -134,20 +140,42 @@ def _robots_filter_udf(spark: SparkSession, config: CrawlConfig):
     return robots_ok
 
 
-def _budget_df(
+def budget_table(
     spark: SparkSession, config: CrawlConfig, rnd: int = 0
-) -> tuple[DataFrame, int]:
-    """Effective per-host budgets for round ``rnd`` (broadcast-sized).
+) -> DataFrame:
+    """Per-host politeness budgets for round ``rnd`` as a ``(host, _bk)``
+    table: one row per host with its own budget or period, holding
+    ``budget_at(host, rnd)`` — periodic hosts get their base budget on
+    on-rounds and 0 otherwise, evaluated driver-side. It has a row for
+    every host that declares a Crawl-delay (``budgets_from_delays``),
+    so the crawl builds it once, and per round only when periods exist;
+    a hash join keeps the per-row lookup O(1) at any size."""
+    hosts = sorted((set(config.budgets) | set(config.budget_periods)) - {"*"})
+    return spark.createDataFrame(
+        [(h, config.budget_at(h, rnd)) for h in hosts], "host string, _bk int"
+    )
 
-    Periodic hosts (``config.budget_periods``) get their base budget on
-    on-rounds (``rnd % period == 0``) and 0 otherwise — evaluated
-    driver-side from the tiny config dicts, so a period costs nothing
-    distributed. The ``'*'`` default is never periodic."""
-    default = config.budgets.get("*", 1 << 30)
-    hosts = (set(config.budgets) | set(config.budget_periods)) - {"*"}
-    rows = [(h, config.budget_at(h, rnd)) for h in sorted(hosts)]
-    df = spark.createDataFrame(rows or [("__none__", 0)], "host string, _bk int")
-    return df, default
+
+def eligible_frontier(
+    frontier: DataFrame, config: CrawlConfig, cooldown: dict[str, int],
+    rnd: int, budgets: DataFrame,
+) -> DataFrame:
+    """Frontier rows round ``rnd`` may schedule, with their per-host
+    politeness budget as ``_k``. Cooling hosts (``expire_round >= rnd``)
+    drop out through ``isin``, a filter Spark turns into a hash-set
+    probe (``InSet``) past ten hosts; hosts are ``''``, never null, so
+    it keeps the rows an anti-join would. ``_k`` comes from the
+    broadcast hash join of ``budgets`` (``budget_table``), else the
+    ``'*'`` default."""
+    active = sorted(h for h, e in cooldown.items() if e >= rnd)
+    if active:
+        frontier = frontier.where(~F.col("host").isin(active))
+    default = F.lit(config.budgets.get("*", 1 << 30))
+    return (
+        frontier.join(F.broadcast(budgets), "host", "left")
+        .withColumn("_k", F.coalesce(F.col("_bk"), default))
+        .drop("_bk")
+    )
 
 
 def seed_discoveries(
@@ -197,7 +225,7 @@ def _changed_after(store: CrawlStore, after: int, upto: int) -> bool:
 
 def _load_state(store: CrawlStore, rnd: int, filter_cls, geo: dict):
     """The frontier and seen filter as of committed round ``rnd`` — the
-    one loader behind both resume and the end-of-round reload.
+    one loader behind both resume and the between-round reload.
 
     Each table starts from its newest snapshot ``C <= rnd`` and replays
     the discovery log written after it:
@@ -262,7 +290,7 @@ def run_crawl(
     ``frontier_snapshot_every=N`` writes both state snapshots — the
     frontier and the seen filter — on every N-th round that crawled
     something (a cooldown or period-wait round changes neither table and
-    writes neither). Resume and the end-of-round reload are the same
+    writes neither). Resume and the between-round reload are the same
     step: the newest snapshot of each table plus a replay of the
     discovery log written after it (``_load_state``). A larger N drops
     two write jobs from most rounds, at the cost of replaying up to N-1
@@ -298,7 +326,7 @@ def run_crawl(
         )
     store = CrawlStore(spark, store_root, max_write_partitions=write_partitions)
     robots_ok = _robots_filter_udf(spark, config)
-    budget_df, budget_default = _budget_df(spark, config)
+    budgets = budget_table(spark, config)
     # host-priority table. Two feeds, one contract (host -> score):
     #  - ``priority_df`` (DataFrame or parquet path, columns
     #    (host, priority)) — the DISTRIBUTED feed: the rank table stays
@@ -448,8 +476,10 @@ def run_crawl(
         # persist so rounds scan executor memory (spilling to local disk
         # at 10^8-host sizes), not the parquet files, every round
         prio_df = prio_df.persist()
-    _reload_prev = 0.0  # end-of-round state-reload cost, surfaced in the NEXT round's manifest
+    reload_due = False  # a round committed since frontier/bloom were loaded
 
+    sc = spark.sparkContext
+    caller_group = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
     scheduled = fetched = links = None
     try:
         for rnd in range(start_round, config.max_rounds):
@@ -459,26 +489,30 @@ def run_crawl(
 
             # tag every job of the round (scheduler, sequencing, writes) so
             # the manifest can record the per-round Spark job count — the
-            # number the fixed-cost budget tracks
+            # number the fixed-cost budget tracks (less the ids an earlier
+            # run_crawl in this SparkContext left in the same group)
             job_group = f"crawl-round-{rnd}"
-            spark.sparkContext.setJobGroup(job_group, f"crawl round {rnd}")
+            sc.setJobGroup(job_group, f"crawl round {rnd}")
+            prior_jobs = set(sc.statusTracker().getJobIdsForGroup(job_group))
+            phase_t: dict[str, float] = {}
+            if reload_due:
+                # re-read the committed state (bounded lineage across
+                # rounds) in the round it prepares, so no reload follows
+                # the last round and its jobs count toward this round
+                _t0 = time.perf_counter()
+                frontier, bloom = _load_state(
+                    store, rnd - 1, filter_cls, filter_geo
+                )
+                frontier = frontier.cache()
+                phase_t["reload"] = round(time.perf_counter() - _t0, 3)
+                reload_due = False
             _round_t0 = time.perf_counter()
 
-            # -- eligibility: cooldown anti-join (broadcast, one row per host) --
-            active_cd = [(h, e) for h, e in cooldown.items() if e >= rnd]
-            eligible = frontier
-            if active_cd:
-                cd_df = spark.createDataFrame(active_cd, COOLDOWN_SCHEMA)
-                eligible = frontier.join(F.broadcast(cd_df), "host", "left_anti")
-
-            # -- per-host politeness budget (skew-salted two-phase top-k) ------
+            # -- eligibility: cooldown filter + per-host budget join ----------
             if config.budget_periods:
-                # periodic budgets change per round — rebuild the (tiny)
-                # broadcast table from the config dicts
-                budget_df, budget_default = _budget_df(spark, config, rnd)
-            eligible = eligible.join(F.broadcast(budget_df), "host", "left").withColumn(
-                "_k", F.coalesce(F.col("_bk"), F.lit(budget_default))
-            )
+                # periodic budgets change per round — rebuild the table
+                budgets = budget_table(spark, config, rnd)
+            eligible = eligible_frontier(frontier, config, cooldown, rnd, budgets)
             # -- optional global round budget (fair-share across hosts) -------
             # Hamilton apportionment of config.global_budget over each host's
             # consumable demand min(pending, politeness budget); the per-host
@@ -510,9 +544,10 @@ def run_crawl(
                     )
                     .drop("_g")
                 )
+            # -- per-host politeness budget (skew-salted two-phase top-k) ------
             scheduled = topk_per_group(
                 eligible, ["host"], ["disc_round", "disc_seq"], F.col("_k"), salt=8
-            ).drop("_bk", "_k", "_rank")
+            ).drop("_k", "_rank")
 
             # -- deterministic global crawl order ------------------------------
             # default: pure BFS (disc_round, disc_seq) — the reference's FIFO
@@ -549,13 +584,7 @@ def run_crawl(
                 )
                 n_scheduled = config.round_capacity
             scheduled = scheduled.cache()
-            phase_t = {"schedule": round(time.perf_counter() - _t0, 3)}
-            if _reload_prev:
-                # end-of-previous-round state reload (committed frontier +
-                # seen-filter re-read) — it prepares THIS round, so it is
-                # this round's fixed cost
-                phase_t["reload"] = _reload_prev
-                _reload_prev = 0.0
+            phase_t["schedule"] = round(time.perf_counter() - _t0, 3)
             phase_t["_round_t0"] = _round_t0
             if n_scheduled == 0:
                 # wait for periodic budgets only while a full period cycle
@@ -591,9 +620,8 @@ def run_crawl(
                         else spark.createDataFrame([], DISC_SCHEMA)
                     )
                     seed_disc = None
-                    rc = _RoundCommit(
-                        store, rnd, spark, bloom.n_buckets, job_group=job_group
-                    )
+                    rc = _RoundCommit(store, rnd, spark, bloom.n_buckets,
+                                      job_group=job_group, prior_jobs=prior_jobs)
                     rc.begin(_empty_pages(spark), _empty_links(spark))
                     rc.finish(disc_empty, cooldown, stats,
                               n_frontier=n_frontier)
@@ -654,7 +682,7 @@ def run_crawl(
             # write (pages, which evaluates the text-extraction UDF) runs
             # concurrently with link filtering + the seen probe + sequencing
             rc = _RoundCommit(store, rnd, spark, bloom.n_buckets,
-                              job_group=job_group)
+                              job_group=job_group, prior_jobs=prior_jobs)
             rc.begin(pages_df, links.drop("seq"))
 
             try:
@@ -750,22 +778,21 @@ def run_crawl(
                 rc.abort()
                 raise
 
-            # re-read committed state → bounded lineage across rounds; the
-            # with_global_seq checkpoints free themselves via the
+            # the with_global_seq checkpoints free themselves via the
             # ContextCleaner once these per-round frames are dereferenced
             frontier.unpersist()
             scheduled.unpersist()
             fetched.unpersist()
             links.unpersist()
-            _t0 = time.perf_counter()
-            frontier, bloom = _load_state(store, rnd, filter_cls, filter_geo)
-            frontier = frontier.cache()
-            _reload_prev = round(time.perf_counter() - _t0, 3)
+            reload_due = True
     finally:
-        # release everything this call persisted, on every exit path
+        # release everything this call persisted, on every exit path, and
+        # restore the caller's job group (not the last crawl-round-<r>)
         for df in (frontier, scheduled, fetched, links, prio_df):
             if df is not None:
                 df.unpersist()
+        for k, v in caller_group.items():
+            sc.setLocalProperty(k, v)  # None removes the property
     return stats
 
 
@@ -853,7 +880,8 @@ class _RoundCommit:
 
     ``job_group`` tags every job of the round (including the scheduler's,
     via the driver's per-round ``setJobGroup``) so the manifest can record
-    ``spark_jobs`` — the per-round job count the fixed-cost budget tracks.
+    ``spark_jobs`` — the per-round job count the fixed-cost budget tracks:
+    the group's job ids less ``prior_jobs``, those it held before the round.
     """
 
     def __init__(
@@ -863,12 +891,13 @@ class _RoundCommit:
         spark: SparkSession,
         n_buckets: int,
         job_group: str | None = None,
+        prior_jobs: set[int] | frozenset[int] = frozenset(),
     ):
         from concurrent.futures import ThreadPoolExecutor
 
         self.store, self.rnd, self.spark = store, rnd, spark
         self.n_buckets = n_buckets
-        self.job_group = job_group
+        self.job_group, self.prior_jobs = job_group, prior_jobs
         self.timings: dict[str, float] = {}
         self._pool = ThreadPoolExecutor(max_workers=6)
         self._f: dict = {}
@@ -1040,10 +1069,9 @@ class _RoundCommit:
         }
         if self.job_group is not None:
             try:
-                metrics["spark_jobs"] = len(
-                    self.spark.sparkContext.statusTracker()
-                    .getJobIdsForGroup(self.job_group)
-                )
+                ids = set(self.spark.sparkContext.statusTracker()
+                          .getJobIdsForGroup(self.job_group))
+                metrics["spark_jobs"] = len(ids - self.prior_jobs)
             except Exception:
                 pass  # diagnostics only — never fail a commit over it
         store.commit_round(rnd, metrics, lineage)

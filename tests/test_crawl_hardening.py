@@ -148,12 +148,18 @@ def test_resume_refuses_store_without_filter_geometry(spark, tmp_path):
 def test_run_crawl_leaves_nothing_persisted(spark, tmp_path):
     """A long-lived driver may call run_crawl many times: each call must
     release every frame it persisted (the frontier, the round frames,
-    a priority_df feed), so two calls add no persisted RDD."""
+    a priority_df feed), so two calls add no persisted RDD. Each call
+    also hands back the caller's job group, and a round manifest's
+    ``spark_jobs`` counts that round's jobs only, though the second
+    crawl reuses the first one's ``crawl-round-<r>`` group names."""
     import gc
     import time
 
     corpus = _tiny_corpus(spark)
-    jsc = spark.sparkContext._jsc
+    sc = spark.sparkContext
+    jsc = sc._jsc
+    tracker = sc.statusTracker()
+    groups = [f"crawl-round-{r}" for r in range(2)]
 
     def persisted():
         return set(jsc.getPersistentRDDs().keys())
@@ -169,11 +175,25 @@ def test_run_crawl_leaves_nothing_persisted(spark, tmp_path):
     prio = spark.createDataFrame(
         [("a.test", 1.0)], "host string, priority double"
     )
-    for i, kw in enumerate(({}, {"priority_df": prio})):
-        run_crawl(spark, corpus, SEEDS,
-                  CrawlConfig(budgets={"*": 1}, max_rounds=2),
-                  str(tmp_path / f"s{i}"), bloom_buckets=4,
-                  bloom_bits=1 << 14, **kw)
+    try:
+        for i, kw in enumerate(({}, {"priority_df": prio})):
+            sc.setJobGroup(f"caller-{i}", "run_crawl caller")
+            ids = {g: set(tracker.getJobIdsForGroup(g)) for g in groups}
+            run_crawl(spark, corpus, SEEDS,
+                      CrawlConfig(budgets={"*": 1}, max_rounds=2),
+                      str(tmp_path / f"s{i}"), bloom_buckets=4,
+                      bloom_bits=1 << 14, **kw)
+            assert sc.getLocalProperty("spark.jobGroup.id") == f"caller-{i}"
+            new = {g: set(tracker.getJobIdsForGroup(g)) - ids[g]
+                   for g in groups}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    store = CrawlStore(spark, str(tmp_path / "s1"))
+    assert store.committed_rounds() == [0, 1]
+    for r in store.committed_rounds():
+        jobs = store.read_manifest(r)["metrics"]["spark_jobs"]
+        assert jobs == len(new[groups[r]]) > 0, (r, jobs, new)
     # localCheckpoint blocks are released by the ContextCleaner once the
     # JVM collects their datasets
     for _ in range(30):

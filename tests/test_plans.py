@@ -407,3 +407,44 @@ def test_host_reputation_shuffles_keys_not_text(spark):
     assert exchange_count(df) == 2
     for cols in exchange_partition_keys(df):
         assert "text" not in cols, cols
+
+
+def test_eligible_frontier_filters_cooldowns_and_joins_budgets(spark):
+    """The scheduler's eligibility stage drops cooling hosts with a
+    hash-set filter, not a join, and reads per-host budgets through one
+    broadcast hash join — no shuffle — matching the serial spec
+    (``CrawlConfig.budget_at``) on a periodic host's on- and off-rounds."""
+    from crawler_spark.crawl.driver import budget_table, eligible_frontier
+    from crawler_spark.crawl.store import DISC_SCHEMA
+    from crawler_spark.oracle.crawloracle import CrawlConfig
+    from crawler_spark.plans.inspect import formatted_plan
+
+    hosts = ["a.test", "b.test", "p.test", "c0.test", "c7.test",
+             "old.test", "", "z.test"]
+    # cached, so the optimizer cannot fold the filter into local rows
+    frontier = spark.createDataFrame(
+        [(0, i, f"http://{h or 'x'}/{i}", h) for i, h in enumerate(hosts)],
+        DISC_SCHEMA,
+    ).cache()
+    config = CrawlConfig(budgets={"*": 5, "a.test": 2, "p.test": 3},
+                         budget_periods={"p.test": 3, "b.test": 2})
+    # twelve hosts cooling through round 4; old.test expired by round 3
+    cooldown = {f"c{i}.test": 4 for i in range(12)} | {"old.test": 2}
+    for rnd in (3, 4):  # on- then off-round of p.test (b.test: off, on)
+        df = eligible_frontier(frontier, config, cooldown, rnd,
+                               budget_table(spark, config, rnd))
+        plan = formatted_plan(df)
+        assert "INSET" in plan and "LeftAnti" not in plan, plan
+        assert plan.count("BroadcastHashJoin LeftOuter") == 1, plan
+        assert plan.count("Exchange") == plan.count("BroadcastExchange"), plan
+        got = {r["host"]: r["_k"] for r in df.collect()}
+        assert set(got) == set(hosts) - {"c0.test", "c7.test"}
+        assert got == {h: config.budget_at(h, rnd) for h in got}
+    assert {config.budget_at("p.test", 3), config.budget_at("p.test", 4)} == {3, 0}
+
+    # without a '*' entry every unlisted host defaults to 1 << 30
+    config = CrawlConfig(budgets={"a.test": 2})
+    df = eligible_frontier(frontier, config, {}, 0, budget_table(spark, config))
+    got = {r["host"]: r["_k"] for r in df.collect()}
+    assert got == {h: 2 if h == "a.test" else 1 << 30 for h in hosts}
+    frontier.unpersist()
