@@ -314,32 +314,31 @@ def _bench_pipeline(spark, replicate: int = 48) -> dict:
     corpus = corpus_from_documents(docs).repartition(128, "url").cache()
     n_pages = corpus.count()  # synthesis excluded from timing
 
-    from crawler_spark.functions.html import extract_links_udf, extract_text_udf
+    from crawler_spark.functions.html import extract_page_udf
 
-    # warmup: run the same UDFs over ~2% of pages (spread over all cached
+    # warmup: run the same UDF over ~2% of pages (spread over all cached
     # partitions) so python-worker spawn + Arrow/codegen JIT happen before
     # the timed window — we measure steady-state throughput, which is what
     # governs a multi-hour 100 TB run.
     warm = corpus.where(F.pmod(F.xxhash64("url"), F.lit(50)) == 0)
     _materialize(
-        warm.select(
-            F.size(extract_links_udf("html", "url")).alias("n"),
-            F.size(extract_text_udf("html")).alias("m"),
-        )
+        warm.select(F.size(extract_page_udf("html", "url").links).alias("n"))
     )
 
+    # the crawl's extraction: one parse per page, cached, feeds the links
+    # and the text
     t0 = time.perf_counter()
-    links = corpus.select(
-        F.col("url").alias("source"),
-        F.explode(extract_links_udf("html", "url")).alias("l"),
+    pages = corpus.select(
+        "url", extract_page_udf("html", "url").alias("x")
+    ).cache()
+    links = pages.select(
+        F.col("url").alias("source"), F.explode("x.links").alias("l")
     ).select("source", "l.url", "l.host")
     uniq = links.groupBy("url", "host").agg(F.count("*").alias("n_in"))
     _materialize(uniq)
-    texts = corpus.select(
-        "url", F.array_join(extract_text_udf("html"), "\n").alias("text")
-    )
-    _materialize(texts)
+    _materialize(pages.select("url", F.col("x.text").alias("text")))
     dt = time.perf_counter() - t0
+    pages.unpersist()
     corpus.unpersist()
     return {
         "sec": round(dt, 3),

@@ -11,13 +11,18 @@ fetch corpus that yields every phase as a DataFrame, so a single
 spark-submit job (``scripts/run_learn.py``) replaces the reference's
 phase-per-process loop and Catalyst fuses what can be fused.
 
-Input contract: block-level phases re-extract from the corpus ``html``
-(the same Arrow-batched UDF the crawl used — the store's fused ``text``
-column is those blocks newline-joined, so re-extraction is the lossless
-authority, asserted by tests/test_learn.py); host/link phases read the
-store tables directly and never touch html.
+Input contract: the block-level phases (text, sentiment, summaries,
+terms, tags) read the store's ``pages.text`` column, which the crawl
+writes as the page's extracted blocks joined with ``"\\n"``. Splitting it
+gives the blocks back losslessly: ``clean_text`` collapses every
+whitespace run, so no block holds a newline, and every kept block has
+at least two words, so none is empty (tests/test_learn.py checks the
+split against a re-extraction). Only ``canonicals`` reads the corpus
+``html``; host/link phases read the store tables directly.
 
-Scale shape: the only corpus-sized operation is the ``url`` semi-join
+Scale shape: no phase re-parses a page. The block phases group the
+pages table by url once (latest fetch wins) and explode the text; the
+only corpus-sized operation is ``canonicals``' ``url`` semi-join
 selecting fetched pages. On a bucketed corpus (``crawl/corpus.py``) that
 join is one-sided — the corpus side has NO exchange; only the
 (crawl-sized) url list shuffles. Everything downstream is keyed by url,
@@ -32,7 +37,6 @@ from pyspark.sql import functions as F
 from crawler_spark.analytics.text_tier import (
     block_sentiment,
     link_counts,
-    page_blocks,
     page_summaries,
     page_tags,
     page_term_scores,
@@ -56,8 +60,6 @@ PHASES = {
     "canonicals": "rel=canonical collapse (extension; no reference phase)",
 }
 
-_BLOCK_PHASES = frozenset(("text", "sentiment", "summaries", "terms", "tags"))
-
 
 def fetched_pages_html(store: CrawlStore, corpus: DataFrame) -> DataFrame:
     """(url, html) for every page the crawl fetched as html.
@@ -80,11 +82,12 @@ def learn_outputs(
     phases: list[str] | tuple[str, ...] = tuple(PHASES),
     use_trigrams: bool = True,
 ) -> dict[str, DataFrame]:
-    """Every requested phase as a DataFrame, computed over ONE shared
-    block extraction (cached iff >1 block-level phase asks for it).
+    """Every requested phase as a DataFrame. The block phases read the
+    crawl's stored text (no html parse), and nothing is persisted.
 
     ``use_trigrams`` mirrors ``addTermFrequencies``'s trigram path;
-    ``False`` gives ``splitTerms``-style flat-token TF.
+    ``False`` gives ``splitTerms``-style flat-token TF. ``corpus`` is
+    read only by ``canonicals``.
     """
     unknown = sorted(set(phases) - set(PHASES))
     if unknown:
@@ -92,35 +95,32 @@ def learn_outputs(
     want = [p for p in PHASES if p in set(phases)]  # canonical order
     out: dict[str, DataFrame] = {}
 
-    block_want = [p for p in want if p in _BLOCK_PHASES]
-    html = None
-    if block_want or "canonicals" in want:
-        html = fetched_pages_html(store, corpus)
-    if block_want:
-        blocks = page_blocks(html)
-        if len(block_want) > 1:
-            # one html extraction feeds every block phase; without this
-            # each sink re-runs the pandas UDF over the full corpus slice
-            blocks = blocks.cache()
-        if "text" in want:
-            out["text"] = blocks
-        if "sentiment" in want:
-            out["sentiment"] = block_sentiment(blocks)
-        if "summaries" in want:
-            out["summaries"] = page_summaries(
-                blocks, all_urls=html.select("url")
-            )
-        if "terms" in want or "tags" in want:
-            terms = page_term_scores(blocks, use_trigrams=use_trigrams)
-            if "terms" in want:
-                out["terms"] = terms.select("url", "term", "score")
-            if "tags" in want:
-                out["tags"] = page_tags(terms)
+    # (url, block_idx, text): the stored text is the blocks "\n"-joined,
+    # and the "" of a page without blocks splits to [""], which is dropped
+    pages = store.latest_page_text()
+    blocks = pages.select(
+        "url",
+        F.posexplode(
+            F.filter(F.split("text", "\n"), lambda b: b != "")
+        ).alias("block_idx", "text"),
+    )
+    if "text" in want:
+        out["text"] = blocks
+    if "sentiment" in want:
+        out["sentiment"] = block_sentiment(blocks)
+    if "summaries" in want:
+        out["summaries"] = page_summaries(blocks, all_urls=pages.select("url"))
+    if "terms" in want or "tags" in want:
+        terms = page_term_scores(blocks, use_trigrams=use_trigrams)
+        if "terms" in want:
+            out["terms"] = terms.select("url", "term", "score")
+        if "tags" in want:
+            out["tags"] = page_tags(terms)
     if "canonicals" in want:
         from crawler_spark.functions.html import extract_canonical_udf
         from crawler_spark.operators.redirects import canonical_collapse
 
-        decl = html.select(
+        decl = fetched_pages_html(store, corpus).select(
             "url",
             extract_canonical_udf("html", "url").alias("canonical"),
         )

@@ -12,7 +12,7 @@ as iterative batch rounds. Each round:
                  (priority queue: host-rank broadcast join + global
                   round capacity when configured; default = pure BFS)
              ──left join corpus── simulated fetch (url → html/status/ct)
-             ──extract_links/extract_text pandas UDFs── (Arrow-batched)
+             ──extract_page pandas UDF── one parse: text + links (Arrow-batched)
              ──robots + fetchable filters──
              ──bloom.filter_unseen── URL-seen set (bloom + exact re-check)
              ──with_global_seq── discovery priority (disc_round, disc_seq)
@@ -46,7 +46,7 @@ from crawler_spark.crawl.store import (
     DISC_SCHEMA,
     CrawlStore,
 )
-from crawler_spark.functions.html import extract_links_udf, extract_text_udf
+from crawler_spark.functions.html import extract_page_udf
 from crawler_spark.functions.urls import get_hostname, is_fetchable
 from crawler_spark.operators.dust import apply_dust_rules
 from crawler_spark.operators.seen import BloomSeenSet
@@ -641,7 +641,13 @@ def run_crawl(
             ).withColumn(
                 "status", F.coalesce(F.col("_c_status"), F.lit(-100)).cast("int")
             )
-            fetched = fetched.cache()
+            # one parse per html page (Arrow-batched pandas UDF) yields both
+            # the text and the links; the cache holds them instead of the html
+            is_html = F.col("type") == "html"
+            fetched = fetched.withColumn(
+                "_x",
+                extract_page_udf(F.when(is_html, F.col("_c_html")), "url"),
+            ).drop("_c_html").cache()
 
             # extracted text per url (the byte-identical per-row invariant) is
             # fused onto the pages row — one write instead of two; retry_after
@@ -649,21 +655,17 @@ def run_crawl(
             # (driver-side footer read in _commit) instead of a collect job
             pages_df = fetched.select(
                 "seq", "url", "host", "status", "type",
-                F.when(
-                    F.col("type") == "html",
-                    F.array_join(extract_text_udf("_c_html"), "\n"),
-                ).alias("text"),
+                F.when(is_html, F.col("_x.text")).alias("text"),
                 F.col("_c_retry").cast("int").alias("retry_after"),
             )
 
-            # -- link extraction (Arrow-batched pandas UDF) --------------------
             links = (
-                fetched.where(F.col("type") == "html")
+                fetched.where(is_html)
                 .select(
                     "seq",
                     F.col("url").alias("source"),
                     F.col("host").alias("source_host"),
-                    F.explode(extract_links_udf("_c_html", "url")).alias("l"),
+                    F.explode("_x.links").alias("l"),
                 )
                 .select(
                     "seq",
@@ -678,9 +680,10 @@ def run_crawl(
 
             # -- fetch-side writes start NOW, overlapping the discovery work --
             # pages/links/seen depend only on the scheduled fetch; submitting
-            # them before the sequencing job below means the round's widest
-            # write (pages, which evaluates the text-extraction UDF) runs
+            # them before the sequencing job below means the writes run
             # concurrently with link filtering + the seen probe + sequencing
+            # (all of them read the fetched cache, which the first job to
+            # reach a partition fills, running the extraction UDF once)
             rc = _RoundCommit(store, rnd, spark, bloom.n_buckets,
                               job_group=job_group, prior_jobs=prior_jobs)
             rc.begin(pages_df, links.drop("seq"))
@@ -941,8 +944,7 @@ class _RoundCommit:
 
         The url-only seen log gets one row per crawled page, keyed and
         sorted by its filter bucket so later rounds' ``bucket IN (...)``
-        exact re-checks prune at row-group level; column pruning keeps the
-        text-extraction UDF out of this projection's plan."""
+        exact re-checks prune at row-group level."""
         seen_df = pages_df.select(
             F.pmod(F.xxhash64("url"), F.lit(self.n_buckets))
             .cast("int")

@@ -621,3 +621,15 @@ class CrawlStore:
             .where(F.col("type") == "html")
             .select(*cols)
         )
+
+    def latest_page_text(self) -> DataFrame:
+        """(url, text), one row per fetched html url. ``read_page_text``
+        has one row per FETCH, so a retracted-and-recrawled url appears
+        once per fetch round; the latest round wins (one aggregation on
+        url). A page whose extraction kept no block has text ``""``."""
+        return (
+            self.read_page_text()
+            .where(F.col("text").isNotNull())
+            .groupBy("url")
+            .agg(F.max_by("text", "round").alias("text"))
+        )

@@ -29,7 +29,9 @@ changes ``:has(div)`` outcomes; we replicate that).
 These kernels run inside Arrow-batched pandas UDFs (``mapInPandas`` /
 scalar pandas UDF) — batch-at-a-time transfer, parsing inherently
 per-document. The same kernels are called serially by the golden oracle, so
-distributed output is byte-identical to the oracle by construction.
+distributed output is byte-identical to the oracle by construction. The
+crawl calls ``extract_page``, which parses each page once and walks the
+same tree for both: its result equals the two kernels side by side.
 """
 
 from __future__ import annotations
@@ -194,25 +196,30 @@ _HAS_P_DIV = frozenset(["p", "div"])
 _HAS_DIV = frozenset(["div"])
 
 
+def _text_blocks(root: _Node) -> list[str]:
+    """The ``extractText`` walk over a parsed tree. Strips the removed
+    subtrees IN PLACE, so walk anything else over ``root`` first."""
+    body = _find_first(root, "body") or root
+    _strip_removed(body)
+    blocks: list[str] = []
+    for el in _iter_elements(body):
+        if el.tag == "p" and not _has_descendant(el, _HAS_P_DIV):
+            blocks.append(clean_text(node_text(el)))
+        elif el.tag == "div" and not _has_descendant(el, _HAS_DIV):
+            blocks.append(clean_text(node_text(el)))
+    # split(/\s/).length > 1 (text.ts:57-62)
+    kept = [b for b in blocks if len(b.split(" ")) > 1]
+    # dedupe, first-occurrence order (text.ts:30-38)
+    seen: dict[str, None] = {}
+    for b in kept:
+        seen.setdefault(b, None)
+    return [b.strip() for b in seen.keys()]
+
+
 def extract_text_blocks(html: str) -> list[str]:
     """Reference ``extractText`` (``text.ts:46-81``): ordered, deduped blocks."""
     try:
-        root = parse_html(html)
-        body = _find_first(root, "body") or root
-        _strip_removed(body)
-        blocks: list[str] = []
-        for el in _iter_elements(body):
-            if el.tag == "p" and not _has_descendant(el, _HAS_P_DIV):
-                blocks.append(clean_text(node_text(el)))
-            elif el.tag == "div" and not _has_descendant(el, _HAS_DIV):
-                blocks.append(clean_text(node_text(el)))
-        # split(/\s/).length > 1 (text.ts:57-62)
-        kept = [b for b in blocks if len(b.split(" ")) > 1]
-        # dedupe, first-occurrence order (text.ts:30-38)
-        seen: dict[str, None] = {}
-        for b in kept:
-            seen.setdefault(b, None)
-        return [b.strip() for b in seen.keys()]
+        return _text_blocks(parse_html(html))
     except Exception:  # noqa: BLE001 — reference returns [] on extract failure
         return []
 
@@ -257,6 +264,28 @@ def extract_images_from(
     return out
 
 
+def _kept_anchors(root: _Node, base_url: str) -> Iterator[tuple[_Node, str]]:
+    """``<a>`` elements in document order whose ``href`` canonicalizes,
+    with that canonical url: the one anchor walk behind links and
+    anchors, so their ``link_pos`` numbering is the same by construction."""
+    for el in _iter_elements(root):
+        if el.tag != "a":
+            continue
+        href = el.attrs.get("href")
+        if href is None:
+            continue
+        canon = normalize_url(href, base_url)
+        if canon:
+            yield el, canon
+
+
+def _links(root: _Node, base_url: str) -> list[tuple[str, str, int]]:
+    return [
+        (canon, get_hostname(canon), pos)
+        for pos, (_el, canon) in enumerate(_kept_anchors(root, base_url))
+    ]
+
+
 def extract_links_from(html: str, base_url: str) -> list[tuple[str, str, int]]:
     """Anchors in document order → (canon_url, host, link_pos).
 
@@ -267,24 +296,7 @@ def extract_links_from(html: str, base_url: str) -> list[tuple[str, str, int]]:
     order after its filter, which is the crawl-order tiebreak (SURVEY §2.6
     O1).
     """
-    try:
-        root = parse_html(html)
-    except Exception:  # noqa: BLE001
-        return []
-    out: list[tuple[str, str, int]] = []
-    pos = 0
-    for el in _iter_elements(root):
-        if el.tag != "a":
-            continue
-        href = el.attrs.get("href")
-        if href is None:
-            continue
-        canon = normalize_url(href, base_url)
-        if not canon:
-            continue
-        out.append((canon, get_hostname(canon), pos))
-        pos += 1
-    return out
+    return _links(parse_html(html), base_url)
 
 
 def extract_anchors_from(
@@ -297,29 +309,36 @@ def extract_anchors_from(
     byte-parity with it; this kernel is the training-data extension: the
     anchor's cheerio-style ``.text()`` (descendant text concatenated,
     then ``cleanText`` — the same normalization the reference applies to
-    text blocks, ``text.ts:55``) rides along with each kept link. Link
-    filtering, canonicalization, and ``link_pos`` numbering are
-    IDENTICAL to ``extract_links_from`` by construction, so the two
-    extractions join 1:1 on (page, link_pos).
+    text blocks, ``text.ts:55``) rides along with each kept link. Both
+    kernels walk ``_kept_anchors``, so the two extractions join 1:1 on
+    (page, link_pos).
     """
+    return [
+        (canon, get_hostname(canon), clean_text(node_text(el)), pos)
+        for pos, (el, canon) in enumerate(
+            _kept_anchors(parse_html(html), base_url)
+        )
+    ]
+
+
+def extract_page(
+    html: str, base_url: str
+) -> tuple[str, list[tuple[str, str, int]]]:
+    """One parse → (text, links): ``"\\n".join(extract_text_blocks(html))``
+    and ``extract_links_from(html, base_url)``, the two things the crawl
+    stores per fetched page.
+
+    The links are walked first, because the text walk strips subtrees
+    from the tree. Each half fails as its own kernel does: a text-side
+    exception gives no blocks (``""``) and keeps the links.
+    """
+    root = parse_html(html)
+    links = _links(root, base_url)
     try:
-        root = parse_html(html)
-    except Exception:  # noqa: BLE001
-        return []
-    out: list[tuple[str, str, str, int]] = []
-    pos = 0
-    for el in _iter_elements(root):
-        if el.tag != "a":
-            continue
-        href = el.attrs.get("href")
-        if href is None:
-            continue
-        canon = normalize_url(href, base_url)
-        if not canon:
-            continue
-        out.append((canon, get_hostname(canon), clean_text(node_text(el)), pos))
-        pos += 1
-    return out
+        text = "\n".join(_text_blocks(root))
+    except Exception:  # noqa: BLE001 — as extract_text_blocks
+        text = ""
+    return text, links
 
 
 def extract_canonical_from(html: str, base_url: str) -> str | None:
@@ -386,6 +405,24 @@ def extract_links_udf(htmls: pd.Series, base_urls: pd.Series) -> pd.Series:
             for h, b in zip(htmls, base_urls)
         ]
     )
+
+
+PAGE_STRUCT = T.StructType(
+    [
+        T.StructField("text", T.StringType()),
+        T.StructField("links", LINK_STRUCT),
+    ]
+)
+
+
+@F.pandas_udf(PAGE_STRUCT)
+def extract_page_udf(htmls: pd.Series, base_urls: pd.Series) -> pd.DataFrame:
+    """``extract_page`` per row: ``("", [])`` for a null html."""
+    pages = [
+        extract_page(_to_str(h), b or "") if h is not None else ("", [])
+        for h, b in zip(htmls, base_urls)
+    ]
+    return pd.DataFrame(pages, columns=["text", "links"])
 
 
 ANCHOR_STRUCT = T.ArrayType(

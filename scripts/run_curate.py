@@ -122,15 +122,9 @@ def main() -> None:
     if args.docs:
         docs = spark.read.parquet(args.docs).select("doc_id", "text", "lang")
     else:
-        # read_page_text yields one row per FETCH, so a retracted-and-
-        # recrawled url appears once per round; latest-round-wins keeps
-        # doc_id = xxhash64(url) unique (one aggregation on url — the
-        # same shuffle key the store already buckets by)
-        pages = CrawlStore(spark, args.store).read_page_text()
+        # one text per url (latest fetch wins) keeps doc_id unique
         base = (
-            pages.where(F.col("text").isNotNull())
-            .groupBy("url")
-            .agg(F.max_by("text", "round").alias("text"))
+            CrawlStore(spark, args.store).latest_page_text()
             .select(F.xxhash64("url").alias("doc_id"), "text")
         )
         docs = base.join(

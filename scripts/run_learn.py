@@ -3,7 +3,8 @@
 
 The reference runs each analytics phase as its own CLI process over the
 crawled pages (``index.ts:18-52``). Here all requested phases run in one
-Spark job over the crawl store + corpus:
+Spark application over the crawl store (the page text the crawl
+extracted) + the corpus (read for canonicals only):
 
     spark-submit --master <cluster> --py-files crawler_spark.zip \\
         scripts/run_learn.py \\
@@ -38,7 +39,9 @@ def main() -> None:
     ap.add_argument("--store", required=True, help="crawl store root")
     ap.add_argument("--corpus", required=True,
                     help="parquet dir (or bucketed table path) of the "
-                         "Common-Crawl-style pages table the crawl ran on")
+                         "Common-Crawl-style pages table the crawl ran on; "
+                         "only the canonicals phase reads it (the others "
+                         "read the store)")
     ap.add_argument("--out", required=True, help="output root (parquet)")
     ap.add_argument("--phases", default=",".join(PHASES),
                     help=f"comma list of {','.join(PHASES)}")

@@ -149,8 +149,10 @@ def test_cli_curate_store_with_refetched_urls(spark, tmp_path):
     doc_id = xxhash64(url) is only unique if the reader takes
     latest-round-wins first. Regression: the raw read_page_text join
     row-multiplied refetched urls (and cross-paired old text with new
-    lang rows) straight into the curated output."""
+    lang rows) straight into the curated output. Learn's block phases
+    read the same ``CrawlStore.latest_page_text``."""
     from crawler_spark import CrawlConfig, CrawlStore, retract_urls, run_crawl
+    from crawler_spark.analytics.learn import learn_outputs
     from crawler_spark.fixtures.doccorpus import corpus_from_documents
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -179,6 +181,14 @@ def test_cli_curate_store_with_refetched_urls(spark, tmp_path):
         st.read_page_text().where("text is not null")
         .select("url").distinct().count()
     )
+    # learn reads the same latest-fetch-wins text: one page per url
+    learned = learn_outputs(st, corpus, ["text", "summaries"])
+    assert learned["text"].groupBy("url", "block_idx").count().where(
+        "count > 1"
+    ).count() == 0
+    summaries = learned["summaries"]
+    assert summaries.count() == summaries.select("url").distinct().count() \
+        == n_urls
 
     out = str(tmp_path / "cur")
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}

@@ -3,7 +3,7 @@ refusal of stores without it), fresh-crawl refusal over a used store,
 no state snapshots on empty rounds, snapshot pruning that keeps the
 newest EXISTING snapshot, bucket-sorted seen compaction, the cuckoo
 entry/bucket hash decorrelation, the deterministic top-k salt, and a
-run_crawl that leaves nothing persisted."""
+run_crawl and learn_outputs that leave nothing persisted."""
 
 import os
 
@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawler_spark import CrawlConfig, CrawlStore, run_crawl
+from crawler_spark.analytics.learn import PHASES, learn_outputs
 from crawler_spark.crawl.store import SEEN_SCHEMA
 from tests.test_crawl_golden import _to_spark_corpus
 
@@ -148,7 +149,8 @@ def test_resume_refuses_store_without_filter_geometry(spark, tmp_path):
 def test_run_crawl_leaves_nothing_persisted(spark, tmp_path):
     """A long-lived driver may call run_crawl many times: each call must
     release every frame it persisted (the frontier, the round frames,
-    a priority_df feed), so two calls add no persisted RDD. Each call
+    a priority_df feed), so two calls, and a learn_outputs run over the
+    second store, add no persisted RDD. Each call
     also hands back the caller's job group, and a round manifest's
     ``spark_jobs`` counts that round's jobs only, though the second
     crawl reuses the first one's ``crawl-round-<r>`` group names."""
@@ -194,6 +196,13 @@ def test_run_crawl_leaves_nothing_persisted(spark, tmp_path):
     for r in store.committed_rounds():
         jobs = store.read_manifest(r)["metrics"]["spark_jobs"]
         assert jobs == len(new[groups[r]]) > 0, (r, jobs, new)
+    # the post-crawl learn tier, every phase run to completion, must
+    # release what it persisted too
+    outputs = learn_outputs(store, corpus)
+    assert set(outputs) == set(PHASES)
+    for df in outputs.values():
+        df.write.format("noop").mode("overwrite").save()
+    del outputs, df
     # localCheckpoint blocks are released by the ContextCleaner once the
     # JVM collects their datasets
     for _ in range(30):

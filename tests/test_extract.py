@@ -111,6 +111,7 @@ def test_kernels_survive_random_tag_soup():
     from crawler_spark.functions.html import (
         extract_images_from,
         extract_links_from,
+        extract_page,
         extract_text_blocks,
     )
 
@@ -129,3 +130,9 @@ def test_kernels_survive_random_tag_soup():
         assert all(isinstance(b, str) for b in blocks)
         assert all(isinstance(u, str) and pos >= 0 for u, _h, pos in links)
         assert all(isinstance(u, str) for u, _a, _d, _p in imgs)
+        # the crawl's one-parse kernel is the two kernels side by side,
+        # and "\n" separates blocks losslessly (learn splits on it)
+        assert extract_page(soup, "http://base.test/a/b") == (
+            "\n".join(blocks), links
+        )
+        assert not any("\n" in b for b in blocks)

@@ -1,9 +1,10 @@
 """Learn-tier composition over a completed crawl store.
 
-Key invariant: block-level phases re-extract from corpus html with the
-same UDF the crawl used, so newline-joining the blocks must reproduce the
-store's fused ``text`` column byte-for-byte (driver writes
-``array_join(extract_text_udf(html), "\\n")`` — crawl/driver.py:455).
+Key invariant: the block-level phases split the store's ``text`` column
+(the crawl writes each page's ``extract_page`` text, its blocks joined
+with ``"\\n"`` — crawl/driver.py ``run_crawl``), so the stored text must
+split back to exactly the blocks ``extract_text_blocks`` re-extracts from
+the corpus html.
 """
 
 import json
@@ -43,25 +44,26 @@ def crawled(spark, tmp_path_factory):
     return CrawlStore(spark, root), corpus, corpus_dir
 
 
-def test_blocks_rejoin_to_stored_text(crawled):
+def test_stored_text_splits_to_reextracted_blocks(crawled):
+    from crawler_spark.functions.html import extract_text_blocks
+
     store, corpus, _ = crawled
-    out = learn_outputs(store, corpus, ["text"])
-    rejoined = (
-        out["text"]
-        .groupBy("url")
-        .agg(F.array_join(
-            F.array_sort(F.collect_list(F.struct("block_idx", "text")))
-            .getField("text"), "\n").alias("text"))
-    )
-    stored = (
-        store.read_page_text()
-        .where(F.length("text") > 0)  # block-less pages store ""
-        .select("url", F.col("text").alias("stored_text"))
-    )
-    joined = stored.join(rejoined, "url", "left")
-    diff = joined.where(~F.col("stored_text").eqNullSafe(F.col("text")))
-    assert diff.count() == 0
-    assert stored.count() == rejoined.count()
+    html_urls = {
+        r.url for r in store.read_pages().where(F.col("type") == "html")
+        .select("url").distinct().collect()
+    }
+    expected = {
+        r.url: extract_text_blocks(bytes(r.html).decode("utf-8", "replace"))
+        for r in corpus.select("url", "html").collect()
+        if r.url in html_urls
+    }
+    assert len(expected) == len(html_urls)
+    got: dict[str, list[tuple[int, str]]] = {}
+    for r in learn_outputs(store, corpus, ["text"])["text"].collect():
+        got.setdefault(r.url, []).append((r.block_idx, r.text))
+    got_blocks = {u: [t for _i, t in sorted(b)] for u, b in got.items()}
+    # a block-less page stores "" and has no text rows
+    assert got_blocks == {u: b for u, b in expected.items() if b}
 
 
 def test_phase_shapes_and_consistency(crawled):
