@@ -593,7 +593,8 @@ class CrawlStore:
         path = self.table_round_path(table, rnd)
         if not os.path.isdir(path):
             return self.spark.createDataFrame([], schema)
-        return self.spark.read.parquet(path)
+        # the known schema spares a footer-reading inference job per read
+        return self.spark.read.schema(schema).parquet(path)
 
     def rebuild_frontier(self, upto_round: int) -> DataFrame:
         """Merge-on-read frontier: discoveries minus crawled pages — the

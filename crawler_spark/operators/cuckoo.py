@@ -279,5 +279,6 @@ class CuckooSeenSet:
         slots_per_entry: int = 4,
     ) -> "CuckooSeenSet":
         return cls(
-            spark.read.parquet(path), n_buckets, m_entries, slots_per_entry
+            spark.read.schema(CUCKOO_SCHEMA).parquet(path), n_buckets,
+            m_entries, slots_per_entry,
         )

@@ -276,4 +276,5 @@ class BloomSeenSet:
         cls, spark, path: str, n_buckets: int = 64, m_bits: int = 1 << 20,
         k_hashes: int = 7,
     ) -> "BloomSeenSet":
-        return cls(spark.read.parquet(path), n_buckets, m_bits, k_hashes)
+        return cls(spark.read.schema(BLOOM_SCHEMA).parquet(path),
+                   n_buckets, m_bits, k_hashes)

@@ -4,6 +4,8 @@ the correctness authority; the filter only bounds what it reads), and its
 delete unlocks the retraction → recrawl path bloom cannot serve.
 """
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -17,6 +19,30 @@ from tests.test_crawl_golden import _to_spark_corpus
 @pytest.fixture(scope="module")
 def web():
     return generate(seed=23, n_pages=100)
+
+
+@pytest.fixture(scope="module")
+def corpus(spark, web):
+    return _to_spark_corpus(spark, web.pages)
+
+
+@pytest.fixture(scope="module")
+def bloom_root(spark, web, corpus, tmp_path_factory):
+    """The full crawl under the bloom filter, shared read-only."""
+    root = str(tmp_path_factory.mktemp("bloom"))
+    run_crawl(spark, corpus, web.seeds.url.tolist(), _cfg(web), root,
+              bloom_buckets=8, bloom_bits=1 << 16, seen_filter="bloom")
+    return root
+
+
+@pytest.fixture(scope="module")
+def cuckoo_root(spark, web, corpus, tmp_path_factory):
+    """The same crawl under the cuckoo filter; a test that changes it
+    works on a copy."""
+    root = str(tmp_path_factory.mktemp("cuckoo"))
+    run_crawl(spark, corpus, web.seeds.url.tolist(), _cfg(web), root,
+              bloom_buckets=8, cuckoo_entries=1 << 12, seen_filter="cuckoo")
+    return root
 
 
 def _cfg(w, max_rounds=60):
@@ -40,32 +66,21 @@ def _pages(store):
     )
 
 
-def test_cuckoo_crawl_matches_bloom_golden(spark, web, tmp_path):
-    corpus = _to_spark_corpus(spark, web.pages)
-    seeds = web.seeds.url.tolist()
-
-    root_b = str(tmp_path / "bloom")
-    run_crawl(spark, corpus, seeds, _cfg(web), root_b, bloom_buckets=8,
-              bloom_bits=1 << 16, seen_filter="bloom")
-    root_c = str(tmp_path / "cuckoo")
-    run_crawl(spark, corpus, seeds, _cfg(web), root_c, bloom_buckets=8,
-              cuckoo_entries=1 << 12, seen_filter="cuckoo")
-
-    assert _pages(CrawlStore(spark, root_c)) == _pages(
-        CrawlStore(spark, root_b)
+def test_cuckoo_crawl_matches_bloom_golden(spark, bloom_root, cuckoo_root):
+    assert _pages(CrawlStore(spark, cuckoo_root)) == _pages(
+        CrawlStore(spark, bloom_root)
     )
 
 
-def test_cuckoo_retract_then_recrawl(spark, web, tmp_path):
+def test_cuckoo_retract_then_recrawl(spark, web, corpus, cuckoo_root,
+                                    tmp_path):
     """Full crawl → retract two crawled urls → resume: exactly those urls
     are fetched once more (via their original discovery records), then
     the crawl re-converges — retraction is one extra crawl per url, not
     a permanent hole."""
-    corpus = _to_spark_corpus(spark, web.pages)
     seeds = web.seeds.url.tolist()
     root = str(tmp_path / "recrawl")
-    run_crawl(spark, corpus, seeds, _cfg(web), root, bloom_buckets=8,
-              cuckoo_entries=1 << 12, seen_filter="cuckoo")
+    shutil.copytree(cuckoo_root, root)
     store = CrawlStore(spark, root)
     before = _pages(store)
     crawled = [t[2] for t in before]
@@ -91,7 +106,9 @@ def test_cuckoo_retract_then_recrawl(spark, web, tmp_path):
     assert not store.has_retractions()
 
 
-def test_bucketed_corpus_crawl_matches_plain(spark, web, tmp_path):
+def test_bucketed_corpus_crawl_matches_plain(
+    spark, web, corpus, bloom_root, tmp_path
+):
     """The bucketed-corpus layout (shuffle-free fetch join) must be
     invisible to crawl semantics: identical pages table to the plain
     cached-DataFrame corpus path."""
@@ -101,13 +118,7 @@ def test_bucketed_corpus_crawl_matches_plain(spark, web, tmp_path):
         save_bucketed_corpus,
     )
 
-    corpus = _to_spark_corpus(spark, web.pages)
     seeds = web.seeds.url.tolist()
-
-    root_a = str(tmp_path / "plain")
-    run_crawl(spark, corpus, seeds, _cfg(web), root_a, bloom_buckets=8,
-              bloom_bits=1 << 16)
-
     save_bucketed_corpus(
         corpus, "t_crawl_corpus_b", n_buckets=8,
         path=str(tmp_path / "corpus_b"),
@@ -118,17 +129,18 @@ def test_bucketed_corpus_crawl_matches_plain(spark, web, tmp_path):
         run_crawl(spark, cb, seeds, _cfg(web), root_b, bloom_buckets=8,
                   bloom_bits=1 << 16)
         assert _pages(CrawlStore(spark, root_b)) == _pages(
-            CrawlStore(spark, root_a)
+            CrawlStore(spark, bloom_root)
         )
     finally:
         drop_bucketed_corpus(spark, "t_crawl_corpus_b")
 
 
-def test_resume_with_wrong_filter_type_fails_clearly(spark, web, tmp_path):
+def test_resume_with_wrong_filter_type_fails_clearly(
+    spark, web, corpus, tmp_path
+):
     """Resuming a bloom store with seen_filter='cuckoo' must raise a
     clear ValueError at load, not an opaque cogroup/schema error later:
     the filter_geometry.json validation names both geometries."""
-    corpus = _to_spark_corpus(spark, web.pages)
     seeds = web.seeds.url.tolist()
     root = str(tmp_path / "mismatch")
     run_crawl(spark, corpus, seeds, _cfg(web, max_rounds=2), root,

@@ -1,7 +1,9 @@
 """Sitemap parsing and store compaction/pruning."""
 
 import os
-import tempfile
+import shutil
+
+import pytest
 
 from crawler_spark.functions.sitemaps import parse_sitemap, urls_from_sitemaps
 
@@ -64,7 +66,12 @@ def test_urls_from_sitemaps_canonicalizes(spark):
     assert hosts == {"a.test", "p.test"}
 
 
-def _crawled_store(spark, max_rounds=4):
+@pytest.fixture(scope="module")
+def crawled_store(spark, tmp_path_factory):
+    """``crawled_store(max_rounds)`` -> (store, corpus, cfg, root): a
+    fresh copy of the store a ``max_rounds`` crawl leaves. Each horizon
+    is crawled once per module; every caller gets its own copy, since
+    the tests compact, crash and resume it."""
     from crawler_spark.crawl.driver import run_crawl
     from crawler_spark.crawl.store import CrawlStore
     from crawler_spark.fixtures.doccorpus import corpus_from_documents, seed_urls
@@ -72,19 +79,30 @@ def _crawled_store(spark, max_rounds=4):
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     corpus = corpus_from_documents(docs).cache()
-    cfg = CrawlConfig(budgets={"*": 8, "hot.docs.test": 16},
-                      max_rounds=max_rounds)
-    root = tempfile.mkdtemp(prefix="compact_")
-    run_crawl(spark, corpus, seed_urls(2), cfg, root, bloom_buckets=4,
-              bloom_bits=1 << 14)
-    return CrawlStore(spark, root), corpus, cfg, root
+    crawled: dict[int, str] = {}
+
+    def make(max_rounds=4):
+        cfg = CrawlConfig(budgets={"*": 8, "hot.docs.test": 16},
+                          max_rounds=max_rounds)
+        if max_rounds not in crawled:
+            crawled[max_rounds] = str(
+                tmp_path_factory.mktemp(f"crawled_{max_rounds}")
+            )
+            run_crawl(spark, corpus, seed_urls(2), cfg, crawled[max_rounds],
+                      bloom_buckets=4, bloom_bits=1 << 14)
+        root = str(tmp_path_factory.mktemp("compact_") / "store")
+        shutil.copytree(crawled[max_rounds], root)
+        return CrawlStore(spark, root), corpus, cfg, root
+
+    yield make
+    corpus.unpersist()
 
 
-def test_compaction_preserves_reads_and_resume(spark):
+def test_compaction_preserves_reads_and_resume(spark, crawled_store):
     from crawler_spark.crawl.driver import run_crawl
     from crawler_spark.crawl.store import PAGES_FILE_SCHEMA, LINKS_SCHEMA
 
-    store, corpus, cfg, root = _crawled_store(spark, max_rounds=3)
+    store, corpus, cfg, root = crawled_store(max_rounds=3)
     before_pages = sorted(
         tuple(r) for r in store.read_pages().collect()
     )
@@ -111,15 +129,15 @@ def test_compaction_preserves_reads_and_resume(spark):
               bloom_bits=1 << 14, resume=True)
     resumed = store.read_pages()
     # uninterrupted reference run
-    store2, _, _, _ = _crawled_store(spark, max_rounds=5)
+    store2, _, _, _ = crawled_store(max_rounds=5)
     want = sorted(tuple(r) for r in store2.read_pages().collect())
     assert sorted(tuple(r) for r in resumed.collect()) == want
 
 
-def test_compaction_idempotent_second_pass(spark):
+def test_compaction_idempotent_second_pass(spark, crawled_store):
     from crawler_spark.crawl.store import PAGES_FILE_SCHEMA
 
-    store, _, _, _ = _crawled_store(spark, max_rounds=4)
+    store, _, _, _ = crawled_store(max_rounds=4)
     rounds = store.committed_rounds()
     before = sorted(tuple(r) for r in store.read_pages().collect())
     store.compact("pages", PAGES_FILE_SCHEMA, upto_round=rounds[1])
@@ -138,14 +156,14 @@ def test_unescape_no_double_pass():
     assert _unescape("&amp;amp;") == "&amp;"
 
 
-def test_compaction_watermark_crash_no_duplicates(spark):
+def test_compaction_watermark_crash_no_duplicates(spark, crawled_store):
     """Crash after segment swap but before round-dir sweep: the watermark
     makes lingering round dirs invisible; resume finishes the sweep."""
     import shutil as sh
 
     from crawler_spark.crawl.store import PAGES_FILE_SCHEMA, CrawlStore
 
-    store, _, _, root = _crawled_store(spark, max_rounds=3)
+    store, _, _, root = crawled_store(max_rounds=3)
     before = sorted(map(tuple, store.read_pages().collect()))
     last = store.committed_rounds()[-1]
     # simulate the crash: snapshot round dirs, compact, restore the dirs
@@ -165,12 +183,12 @@ def test_compaction_watermark_crash_no_duplicates(spark):
     assert sorted(map(tuple, store2.read_pages().collect())) == before
 
 
-def test_compaction_lower_watermark_clamped(spark):
+def test_compaction_lower_watermark_clamped(spark, crawled_store):
     """A second compact with a LOWER upto_round must not lose the rows
     that only exist in the segment (watermark is clamped up)."""
     from crawler_spark.crawl.store import PAGES_FILE_SCHEMA
 
-    store, _, _, _ = _crawled_store(spark, max_rounds=4)
+    store, _, _, _ = crawled_store(max_rounds=4)
     rounds = store.committed_rounds()
     before = sorted(map(tuple, store.read_pages().collect()))
     store.compact("pages", PAGES_FILE_SCHEMA, upto_round=rounds[-1])
@@ -178,10 +196,10 @@ def test_compaction_lower_watermark_clamped(spark):
     assert sorted(map(tuple, store.read_pages().collect())) == before
 
 
-def test_compact_discoveries_schema_without_round(spark):
+def test_compact_discoveries_schema_without_round(spark, crawled_store):
     from crawler_spark.crawl.store import DISC_SCHEMA
 
-    store, _, _, _ = _crawled_store(spark, max_rounds=3)
+    store, _, _, _ = crawled_store(max_rounds=3)
     before = sorted(map(tuple, store.read_discoveries().collect()))
     n = store.compact("discoveries", DISC_SCHEMA,
                       upto_round=store.committed_rounds()[-1])
@@ -189,7 +207,7 @@ def test_compact_discoveries_schema_without_round(spark):
     assert sorted(map(tuple, store.read_discoveries().collect())) == before
 
 
-def test_compaction_crash_before_watermark_commit(spark):
+def test_compaction_crash_before_watermark_commit(spark, crawled_store):
     """Crash AFTER the new segment dir lands but BEFORE the watermark
     replace (the round-1 review's crash window): the watermark still
     names the old generation, so the new segment must be invisible to
@@ -199,7 +217,7 @@ def test_compaction_crash_before_watermark_commit(spark):
 
     from crawler_spark.crawl.store import PAGES_FILE_SCHEMA, CrawlStore
 
-    store, _, _, root = _crawled_store(spark, max_rounds=4)
+    store, _, _, root = crawled_store(max_rounds=4)
     rounds = store.committed_rounds()
     before = sorted(map(tuple, store.read_pages().collect()))
 
