@@ -506,6 +506,7 @@ def _bench_frontier(spark, n_urls: int) -> dict:
     seen.unpersist()
     discoveries.unpersist()
     bloom.blooms.unpersist()
+    scheduled.unpersist()  # with_global_seq's return_count cache
     rows = n_frontier + n_disc
     return {
         "sec": round(dt, 3),

@@ -8,14 +8,16 @@ as iterative batch rounds. Each round:
     frontier ──isin── drop cooling hosts (hash-set filter, no join)
              ──broadcast join── per-host budget table (built once per crawl)
              ──topk_per_group── per-host politeness budget (skew-salted)
-             ──with_global_seq── deterministic (round, seq) crawl order
+             ──with_global_seq── deterministic (round, seq) crawl order,
+                 cached: one job fills and counts it
                  (priority queue: host-rank broadcast join + global
                   round capacity when configured; default = pure BFS)
              ──left join corpus── simulated fetch (url → html/status/ct)
              ──extract_page pandas UDF── one parse: text + links (Arrow-batched)
              ──robots + fetchable filters──
              ──bloom.filter_unseen── URL-seen set (bloom + exact re-check)
-             ──with_global_seq── discovery priority (disc_round, disc_seq)
+             ──with_global_seq── discovery priority (disc_round, disc_seq),
+                 cached like the schedule
              ──commit── pages/links/discoveries/frontier/cooldown/bloom
                         + round manifest (atomic, resumable)
 
@@ -29,6 +31,11 @@ hash/broadcast joins; the two global orderings use the scalable
 ``with_global_seq`` (no single-partition window). Cooldowns are a
 driver-side ``isin`` filter; per-host budgets are a broadcast table
 rebuilt only when periodic budgets change it (``eligible_frontier``).
+
+Tables the driver holds — budgets, Hamilton grants, seeds, the dict
+priority feed, DUST rules, empty frames — are Arrow-backed JVM local
+relations (``session.driver_frame``): a query that reads one starts no
+Python worker.
 """
 
 from __future__ import annotations
@@ -51,6 +58,7 @@ from crawler_spark.functions.urls import get_hostname, is_fetchable
 from crawler_spark.operators.dust import apply_dust_rules
 from crawler_spark.operators.seen import BloomSeenSet
 from crawler_spark.operators.topk import topk_per_group, with_global_seq
+from crawler_spark.session import driver_frame
 from crawler_spark.oracle.crawloracle import (
     DEFAULT_COOLDOWN_SECONDS,
     CrawlConfig,
@@ -149,10 +157,13 @@ def budget_table(
     on-rounds and 0 otherwise, evaluated driver-side. It has a row for
     every host that declares a Crawl-delay (``budgets_from_delays``),
     so the crawl builds it once, and per round only when periods exist;
-    a hash join keeps the per-row lookup O(1) at any size."""
+    a hash join keeps the per-row lookup O(1) at any size. The rows are
+    Arrow batches in the JVM (``driver_frame``), so the join's build
+    side runs no Python worker."""
     hosts = sorted((set(config.budgets) | set(config.budget_periods)) - {"*"})
-    return spark.createDataFrame(
-        [(h, config.budget_at(h, rnd)) for h in hosts], "host string, _bk int"
+    return driver_frame(
+        spark, [(h, config.budget_at(h, rnd)) for h in hosts],
+        "host string, _bk int",
     )
 
 
@@ -180,9 +191,10 @@ def eligible_frontier(
 
 def seed_discoveries(
     spark: SparkSession, seeds: list[str], config: CrawlConfig
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """Seeds become disc_round = -1 discoveries; disc_seq = seed-list index
-    (pre-filter, matching the oracle's enumerate order)."""
+    (pre-filter, matching the oracle's enumerate order). Returns the
+    table and its row count, which the driver knows without a job."""
     rows: dict[str, tuple[int, int, str, str]] = {}
     for i, url in enumerate(seeds):
         host = get_hostname(url)
@@ -196,7 +208,7 @@ def seed_discoveries(
             continue
         # first occurrence wins — matches the oracle's setdefault dedup
         rows.setdefault(url, (-1, i, url, host))
-    return spark.createDataFrame(list(rows.values()), DISC_SCHEMA)
+    return driver_frame(spark, rows.values(), DISC_SCHEMA), len(rows)
 
 
 def _seen_filter_class(
@@ -367,8 +379,8 @@ def run_crawl(
         )
         prio_hint = lambda df: df  # let AQE size the join  # noqa: E731
     elif config.priority:
-        prio_df = spark.createDataFrame(
-            [(h, float(p)) for h, p in config.priority.items()],
+        prio_df = driver_frame(
+            spark, [(h, float(p)) for h, p in config.priority.items()],
             "host string, _hp double",
         )
     # DUST canonicalization rules (config.dust_rules — broadcast-sized
@@ -383,8 +395,8 @@ def run_crawl(
         by_host: dict[str, list[tuple[str, str]]] = {}
         for h, f, t in sorted(config.dust_rules, key=lambda r: (r[1], r[2])):
             by_host.setdefault(h, []).append((f, t))
-        dust_df = spark.createDataFrame(
-            [(h, rl) for h, rl in sorted(by_host.items())],
+        dust_df = driver_frame(
+            spark, sorted(by_host.items()),
             "_rhost string, _rules array<struct<f:string,t:string>>",
         )
 
@@ -431,8 +443,10 @@ def run_crawl(
                     f"— pass resume=True to continue that crawl, or "
                     f"point store_root at a fresh directory"
                 )
-        frontier = seed_discoveries(spark, seeds, config)
-        n_frontier = frontier.count()
+        frontier, n_frontier = seed_discoveries(spark, seeds, config)
+        # cached before the filter reads it: the seed table is evaluated
+        # once for the filter, round 0's schedule and its discovery write
+        frontier = frontier.cache()
         bloom = filter_cls.empty(spark, **filter_geo)
         bloom = bloom.add(frontier.select("url"))
         start_round = 0
@@ -469,8 +483,8 @@ def run_crawl(
         cooldown = {r["host"]: r["expire_round"] for r in cd}
         start_round = last + 1
         seed_disc = None
+        frontier = frontier.cache()
 
-    frontier = frontier.cache()
     if priority_df is not None:
         # the rank table joins once per round for the whole crawl —
         # persist so rounds scan executor memory (spilling to local disk
@@ -480,7 +494,11 @@ def run_crawl(
 
     sc = spark.sparkContext
     caller_group = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
-    scheduled = fetched = links = None
+    # the round's frozen frames: with_global_seq hands back its sequenced
+    # rows cached (one job fills the cache and counts them) for the
+    # schedule and the discoveries; released at the round's end and on
+    # every exit path
+    sched_seq = seq_disc = fetched = links = None
     try:
         for rnd in range(start_round, config.max_rounds):
             # frontier size is tracked from the previous commit — no extra job
@@ -568,11 +586,14 @@ def run_crawl(
                 order_cols = ["_nprio", "disc_round", "disc_seq"]
             # the tracked frontier size is a hard row bound for the schedule —
             # small rounds take with_global_seq's one-job bounded path, big
-            # rounds (the 10^10-frontier shape) the range-partitioned one
-            scheduled, n_scheduled = with_global_seq(
+            # rounds (the 10^10-frontier shape) the range-partitioned one;
+            # either way the sequenced rows come back cached, the one freeze
+            # that the count, the fetch and the frontier merge all read
+            sched_seq, n_scheduled = with_global_seq(
                 scheduled, order_cols, out="seq",
                 return_count=True, small_hint=n_frontier,
             )
+            scheduled = sched_seq
             if prio_df is not None:
                 scheduled = scheduled.drop("_nprio")
             if config.round_capacity and n_scheduled > config.round_capacity:
@@ -583,7 +604,6 @@ def run_crawl(
                     F.col("seq") < F.lit(config.round_capacity)
                 )
                 n_scheduled = config.round_capacity
-            scheduled = scheduled.cache()
             phase_t["schedule"] = round(time.perf_counter() - _t0, 3)
             phase_t["_round_t0"] = _round_t0
             if n_scheduled == 0:
@@ -617,7 +637,7 @@ def run_crawl(
                     disc_empty = (
                         seed_disc
                         if seed_disc is not None
-                        else spark.createDataFrame([], DISC_SCHEMA)
+                        else driver_frame(spark, [], DISC_SCHEMA)
                     )
                     seed_disc = None
                     rc = _RoundCommit(store, rnd, spark, bloom.n_buckets,
@@ -625,9 +645,8 @@ def run_crawl(
                     rc.begin(_empty_pages(spark), _empty_links(spark))
                     rc.finish(disc_empty, cooldown, stats,
                               n_frontier=n_frontier)
-                    scheduled.unpersist()
+                    sched_seq.unpersist()
                     continue
-                scheduled.unpersist()
                 break
             empty_streak = 0
 
@@ -781,17 +800,15 @@ def run_crawl(
                 rc.abort()
                 raise
 
-            # the with_global_seq checkpoints free themselves via the
-            # ContextCleaner once these per-round frames are dereferenced
-            frontier.unpersist()
-            scheduled.unpersist()
-            fetched.unpersist()
-            links.unpersist()
+            # the seen probe's checkpoint (and the range path's) free
+            # themselves via the ContextCleaner once dereferenced
+            for df in (frontier, sched_seq, fetched, links, seq_disc):
+                df.unpersist()
             reload_due = True
     finally:
         # release everything this call persisted, on every exit path, and
         # restore the caller's job group (not the last crawl-round-<r>)
-        for df in (frontier, scheduled, fetched, links, prio_df):
+        for df in (frontier, sched_seq, fetched, links, seq_disc, prio_df):
             if df is not None:
                 df.unpersist()
         for k, v in caller_group.items():
@@ -820,16 +837,16 @@ def retract_urls(
 
 
 def _empty_pages(spark):
-    return spark.createDataFrame(
-        [],
+    return driver_frame(
+        spark, [],
         "seq long, url string, host string, status int, type string, "
         "text string, retry_after int",
     )
 
 
 def _empty_links(spark):
-    return spark.createDataFrame(
-        [],
+    return driver_frame(
+        spark, [],
         "source string, source_host string, url string, host string, "
         "link_pos int",
     )

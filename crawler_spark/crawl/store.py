@@ -45,6 +45,9 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
+
+from crawler_spark.session import driver_frame
 
 TABLES = (
     "pages", "links", "discoveries", "frontier", "cooldown", "bloom", "seen",
@@ -289,7 +292,7 @@ class CrawlStore:
         upto_round = max(upto_round, cur_upto)
         # schemas of tables whose round lives only in the dir name
         # (e.g. DISC_SCHEMA) need the partition column appended to read
-        if "round" not in self.spark.createDataFrame([], schema).columns:
+        if "round" not in DataType.fromDDL(schema).fieldNames():
             schema = schema + ", round int"
         new_gen = cur_gen + 1
         seg = self._segment_dir(table, new_gen)
@@ -403,15 +406,15 @@ class CrawlStore:
                 # lingering dirs (crash mid-sweep) must not double-count
                 parted = parted.where(F.col("round") > watermark)
             parts.append(parted)
-        empty = self.spark.createDataFrame([], schema)
+        names = DataType.fromDDL(schema).fieldNames()
         # normalize column ORDER to the partitioned-read convention (the
         # round partition column comes last) so compaction is invisible
         # to existing readers
-        cols = [c for c in empty.columns if c != "round"] + (
-            ["round"] if "round" in empty.columns else []
+        cols = [c for c in names if c != "round"] + (
+            ["round"] if "round" in names else []
         )
         if not parts:
-            return empty.select(*cols)
+            return driver_frame(self.spark, [], schema).select(*cols)
         out = parts[0].select(*cols)
         for p in parts[1:]:
             out = out.unionByName(p.select(*cols))
@@ -592,7 +595,7 @@ class CrawlStore:
     def read_snapshot(self, table: str, rnd: int, schema: str) -> DataFrame:
         path = self.table_round_path(table, rnd)
         if not os.path.isdir(path):
-            return self.spark.createDataFrame([], schema)
+            return driver_frame(self.spark, [], schema)
         # the known schema spares a footer-reading inference job per read
         return self.spark.read.schema(schema).parquet(path)
 

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from crawler_spark.operators.topk import with_global_seq
+from crawler_spark.session import driver_frame
 
 
 def allocate_budget(
@@ -155,6 +156,7 @@ def _allocate_driver_side(t: DataFrame, total_budget: int) -> DataFrame:
         for i, h in enumerate(order):
             alloc[h] = base[h] + (1 if i < leftover else 0)
     out = [(h, p, alloc[h], min(alloc[h], p)) for h, p, _ in rows]
-    return t.sparkSession.createDataFrame(
-        out, "host string, n_pending long, alloc long, granted long"
+    return driver_frame(
+        t.sparkSession, out,
+        "host string, n_pending long, alloc long, granted long",
     )

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame
 # seen log, so the bucket formula must be computed identically — import,
 # don't re-implement, or the copies drift
 from crawler_spark.operators.seen import _splitmix, _with_bucket_hash
+from crawler_spark.session import driver_frame
 
 CUCKOO_SCHEMA = "bucket int, slots binary, n_items long"
 
@@ -102,7 +103,7 @@ class CuckooSeenSet:
         slots_per_entry: int = 4,
     ) -> "CuckooSeenSet":
         return cls(
-            spark.createDataFrame([], CUCKOO_SCHEMA), n_buckets, m_entries,
+            driver_frame(spark, [], CUCKOO_SCHEMA), n_buckets, m_entries,
             slots_per_entry,
         )
 

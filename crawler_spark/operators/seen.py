@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from crawler_spark.session import driver_frame
+
 _GOLDEN = np.uint64(0x9E3779B97F4A7C15)
 
 BLOOM_SCHEMA = "bucket int, bits binary, n_items long"
@@ -117,7 +119,9 @@ def filter_unseen_via(
     probed = seen_set.probe(candidates, url_col, keep_bucket=keep_bucket)
     if keep_bucket:
         # freeze once: the bucket collect + both branches below reuse
-        # the same probe pass instead of re-running the cogroup UDF
+        # the same probe pass instead of re-running the cogroup UDF.
+        # eager=False is not lazy here: with AQE on (Spark 4.1) this
+        # call already runs the probe's upstream query stages
         probed = probed.localCheckpoint(eager=False)
         buckets = sorted(
             r["bucket"]
@@ -160,7 +164,7 @@ class BloomSeenSet:
         cls, spark, n_buckets: int = 64, m_bits: int = 1 << 20, k_hashes: int = 7
     ) -> "BloomSeenSet":
         return cls(
-            spark.createDataFrame([], BLOOM_SCHEMA), n_buckets, m_bits, k_hashes
+            driver_frame(spark, [], BLOOM_SCHEMA), n_buckets, m_bits, k_hashes
         )
 
     @classmethod

@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from crawler_spark.session import driver_frame
+
 
 def topk_per_group(
     df: DataFrame,
@@ -152,35 +154,37 @@ def with_global_seq(
 ) -> DataFrame | tuple[DataFrame, int]:
     """Add a dense global 0-based (plus ``start``) sequence by total order.
 
-    ``return_count=True`` also returns the exact row count — free, since
-    the per-partition offset computation already counted every row; callers
-    then never need a separate ``count()`` job.
+    ``return_count=True`` also returns the exact row count, and freezes
+    the result: it comes back cached (``.cache()``), so the count and
+    every later reader see the same rows and the upstream chain runs
+    once. The caller owns that cache and unpersists it. Callers then
+    never need a separate ``count()`` job or a cache of their own.
 
     ``small_hint`` is a DRIVER-KNOWN upper bound on ``df``'s row count
     (e.g. the tracked frontier size bounds a crawl round's schedule).
     When the bound fits comfortably in one task (``<= small_max_rows``)
-    the range machinery is skipped entirely: the input is frozen with one
-    lazy ``localCheckpoint`` and the sequence is a single global-order
-    ``row_number`` — ONE Spark job (the count that materializes the
-    checkpoint) instead of the range path's two (range-boundary sampling
-    + per-partition offsets), and the upstream chain is evaluated once
-    instead of twice. The deliberate single-partition window is safe BY
-    the bound's contract; an over-optimistic hint degrades to one slow
-    sort task, never to a wrong sequence. At 10^10-frontier scale rounds
-    exceed the bound and the range-partitioned path engages unchanged.
+    the range machinery is skipped entirely: the sequence is a single
+    global-order ``row_number``, and with ``return_count`` the count is
+    the job that fills the result's cache — ONE Spark job instead of the
+    range path's two (range-boundary sampling + per-partition offsets),
+    with the upstream chain evaluated once. The deliberate
+    single-partition window is safe BY the bound's contract; an
+    over-optimistic hint degrades to one slow sort task, never to a
+    wrong sequence. At 10^10-frontier scale rounds exceed the bound and
+    the range-partitioned path engages unchanged.
     (This is one of the repo's two audited ``WindowExec: No Partition
     Defined`` warning sites — the warning fires exactly when
     ``small_hint <= small_max_rows`` certified the input as one-task
     sized; see BASELINE.md "WindowExec warnings ... pre-answered".)"""
     spark = df.sparkSession
     if small_hint is not None and small_hint <= small_max_rows:
-        base = df.localCheckpoint(eager=False)
         w = Window.orderBy(*order_cols)
-        result = base.withColumn(
+        result = df.withColumn(
             out, (F.row_number().over(w) + F.lit(start - 1)).cast("long")
         )
         if return_count:
-            return result, base.count()
+            result = result.cache()
+            return result, result.count()
         return result
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -189,12 +193,15 @@ def with_global_seq(
     # job must see the SAME partition-id assignment. Without it, the two
     # jobs re-evaluate the range exchange independently and AQE may
     # coalesce them differently (and range-boundary sampling may differ),
-    # silently mis-assigning offsets. localCheckpoint (lazy — the counts
-    # job below materializes it) freezes the blocks with truncated
-    # lineage, and the blocks are released by the ContextCleaner when the
-    # DataFrame is garbage collected — no hidden persist registry to
-    # drain, safe under concurrent callers. Trade: an evicted block fails
-    # the job instead of silently recomputing into different partitions.
+    # silently mis-assigning offsets. localCheckpoint freezes the blocks
+    # with truncated lineage, and the blocks are released by the
+    # ContextCleaner when the DataFrame is garbage collected — no hidden
+    # persist registry to drain, safe under concurrent callers. Trade: an
+    # evicted block fails the job instead of silently recomputing into
+    # different partitions. eager=False does not make it free: with AQE
+    # on (Spark 4.1), building the checkpoint's RDD already runs its
+    # upstream query stages (the range exchange's sampling and shuffle);
+    # only the final stage waits for the counts job below.
     parted = (
         df.repartitionByRange(num_partitions, *order_cols)
         .withColumn("_pid", F.spark_partition_id())
@@ -209,9 +216,7 @@ def with_global_seq(
     for pid in sorted(counts):
         offsets[pid] = acc
         acc += counts[pid]
-    offset_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid int, _off long"
-    )
+    offset_df = driver_frame(spark, offsets.items(), "_pid int, _off long")
     w = Window.partitionBy("_pid").orderBy(*order_cols)
     result = (
         parted.withColumn("_rn", F.row_number().over(w))
@@ -220,5 +225,5 @@ def with_global_seq(
         .drop("_pid", "_rn", "_off")
     )
     if return_count:
-        return result, sum(counts.values())
+        return result.cache(), sum(counts.values())
     return result

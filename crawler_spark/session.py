@@ -1,4 +1,5 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory tuned for this engine, and the one constructor
+of driver-held tables.
 
 Local-mode defaults mirror what we would set on a real cluster: AQE on
 (runtime re-plan + skew-join backstop), Arrow enabled for pandas UDFs,
@@ -8,8 +9,9 @@ shuffle partitions sized to cores instead of the 200 default.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -51,3 +53,27 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def driver_frame(
+    spark: SparkSession, rows: Iterable[tuple], ddl: str
+) -> DataFrame:
+    """A DataFrame of driver-held ``rows`` (tuples in the column order of
+    the DDL schema ``ddl``), shipped to the JVM as Arrow record batches.
+
+    The rows become a ``LocalRelation``: no query that reads them starts
+    a Python worker. A list handed to ``createDataFrame`` is instead a
+    ``PythonRDD`` that every reading query re-runs through Python
+    workers. Every table the crawl builds on the driver (budgets,
+    grants, seeds, empty frames) comes from here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    schema = DataType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

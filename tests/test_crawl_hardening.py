@@ -2,8 +2,9 @@
 refusal of stores without it), fresh-crawl refusal over a used store,
 no state snapshots on empty rounds, snapshot pruning that keeps the
 newest EXISTING snapshot, bucket-sorted seen compaction, the cuckoo
-entry/bucket hash decorrelation, the deterministic top-k salt, and a
-run_crawl and learn_outputs that leave nothing persisted."""
+entry/bucket hash decorrelation, the deterministic top-k salt, a
+ceiling on one round's Spark jobs, and a run_crawl, learn_outputs and
+curation chain that leave nothing persisted."""
 
 import os
 
@@ -14,6 +15,8 @@ from pyspark.sql import functions as F
 from crawler_spark import CrawlConfig, CrawlStore, run_crawl
 from crawler_spark.analytics.learn import PHASES, learn_outputs
 from crawler_spark.crawl.store import SEEN_SCHEMA
+from crawler_spark.operators.dedup import near_dup_curation
+from crawler_spark.operators.quality import gopher_quality_flags, language_id
 from tests.test_crawl_golden import _to_spark_corpus
 
 
@@ -148,9 +151,11 @@ def test_resume_refuses_store_without_filter_geometry(spark, tmp_path):
 
 def test_run_crawl_leaves_nothing_persisted(spark, tmp_path):
     """A long-lived driver may call run_crawl many times: each call must
-    release every frame it persisted (the frontier, the round frames,
-    a priority_df feed), so two calls, and a learn_outputs run over the
-    second store, add no persisted RDD. Each call
+    release every frame it persisted (the frontier, the round frames
+    including the frozen schedule and discoveries, a priority_df feed),
+    so two calls, then a learn_outputs run over the second store and
+    the curation chain of ``scripts/run_curate.py``, add no persisted
+    RDD. Each call
     also hands back the caller's job group, and a round manifest's
     ``spark_jobs`` counts that round's jobs only, though the second
     crawl reuses the first one's ``crawl-round-<r>`` group names."""
@@ -202,7 +207,22 @@ def test_run_crawl_leaves_nothing_persisted(spark, tmp_path):
     assert set(outputs) == set(PHASES)
     for df in outputs.values():
         df.write.format("noop").mode("overwrite").save()
-    del outputs, df
+    # and so must curation: language ID, the Gopher gate and the guarded
+    # near-dup chain (the crawl above fetched no html, so the documents
+    # are given: two identical, one distinct)
+    text = "the quick brown fox jumps over the lazy dog near the river bank"
+    base = spark.createDataFrame(
+        [(1, text), (2, text), (3, "a completely different page about "
+                                   "gardening tools and seasonal planting")],
+        "doc_id long, text string",
+    )
+    docs = base.join(language_id(base), "doc_id")
+    docs = docs.join(gopher_quality_flags(docs, min_words=1)
+                     .where("keep").select("doc_id"), "doc_id", "left_semi")
+    curated = near_dup_curation(docs)
+    assert sorted(r["doc_id"] for r in curated.collect()) == [1, 3]
+    curated.write.format("noop").mode("overwrite").save()
+    del outputs, df, base, docs, curated
     # localCheckpoint blocks are released by the ContextCleaner once the
     # JVM collects their datasets
     for _ in range(30):
@@ -212,6 +232,38 @@ def test_run_crawl_leaves_nothing_persisted(spark, tmp_path):
             break
         time.sleep(1)
     assert persisted() - before == set()
+
+
+# the Spark jobs of test_one_round_job_ceiling's round, scheduler to
+# commit: 38 measured (45 while the driver's tables were list-built
+# PythonRDDs and the schedule was frozen twice)
+ROUND_JOB_CEILING = 38
+
+
+def test_one_round_job_ceiling(spark, tmp_path):
+    """The jobs of one crawl round, as its manifest counts them, stay at
+    or under the count measured when the driver's tables became Arrow
+    relations and each round frame was frozen once: a job that creeps
+    back into the round's critical path fails here first."""
+    html = (b'<html><body><p>page two body</p><a href="/p3">three</a>'
+            b'<a href="/private/x">no</a><a href="http://b.test/">b</a>'
+            b'</body></html>')
+    pages = pd.DataFrame([
+        {"url": u, "warc_ts": None, "html": h, "text": None, "lang": "en",
+         "content_type": "text/html", "status": 200, "retry_after": None}
+        for u, h in [("http://a.test/p2", html), ("http://b.test/", html),
+                     ("http://a.test/p3", html)]
+    ])
+    corpus = _to_spark_corpus(spark, pages)
+    config = CrawlConfig(budgets={"*": 10}, global_budget=2, max_rounds=1,
+                         robots=[("a.test", "/private", False)])
+    root = str(tmp_path / "store")
+    run_crawl(spark, corpus, ["http://a.test/p2", "http://b.test/"], config,
+              root, bloom_buckets=4, seen_filter="cuckoo",
+              cuckoo_entries=1 << 10)
+    m = CrawlStore(spark, root).read_manifest(0)["metrics"]
+    assert m["scheduled"] == 2 and m["frontier_size"] == 3, m
+    assert 0 < m["spark_jobs"] <= ROUND_JOB_CEILING, m["spark_jobs"]
 
 
 def test_prune_snapshots_keeps_newest_existing(spark, tmp_path):

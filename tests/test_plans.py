@@ -448,3 +448,64 @@ def test_eligible_frontier_filters_cooldowns_and_joins_budgets(spark):
     got = {r["host"]: r["_k"] for r in df.collect()}
     assert got == {h: 2 if h == "a.test" else 1 << 30 for h in hosts}
     frontier.unpersist()
+
+
+def _python_rdd(df) -> bool:
+    """Whether reading ``df`` runs a Python worker in its RDD lineage."""
+    return "PythonRDD" in df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def test_driver_tables_build_from_arrow_batches(spark):
+    """Every table the crawl builds on the driver is a JVM local relation:
+    reading the budgets, the small-path Hamilton grants, the seeds or an
+    empty seen filter starts no Python worker. A list handed to
+    ``createDataFrame`` is a ``PythonRDD`` that each reading query re-runs
+    through Python."""
+    from crawler_spark.crawl.driver import budget_table, seed_discoveries
+    from crawler_spark.operators.allocate import allocate_budget
+    from crawler_spark.operators.cuckoo import CuckooSeenSet
+    from crawler_spark.operators.seen import BloomSeenSet
+    from crawler_spark.oracle.crawloracle import CrawlConfig
+
+    listed = spark.createDataFrame([("a.test", 2)], "host string, _bk int")
+    assert _python_rdd(listed)
+
+    config = CrawlConfig(budgets={"*": 5, "a.test": 2},
+                         budget_periods={"p.test": 3})
+    budgets = budget_table(spark, config)
+    demand = spark.createDataFrame(
+        [("a.test", 4), ("b.test", 1)], "host string, n_pending long"
+    )
+    grants = allocate_budget(demand, 3, small_hint=2)
+    seeds, n_seeds = seed_discoveries(
+        spark, ["http://a.test/", "http://b.test/x", "http://a.test/"], config
+    )
+    frames = {
+        "budgets": budgets, "grants": grants, "seeds": seeds,
+        "bloom": BloomSeenSet.empty(spark, n_buckets=4, m_bits=1 << 10).blooms,
+        "cuckoo": CuckooSeenSet.empty(spark, n_buckets=4,
+                                      m_entries=1 << 10).tables,
+    }
+    assert [n for n, df in frames.items() if _python_rdd(df)] == []
+    assert sorted(map(tuple, budgets.collect())) == [("a.test", 2), ("p.test", 5)]
+    assert {r["host"]: r["granted"] for r in grants.collect()} == {
+        "a.test": 2, "b.test": 1}
+    assert n_seeds == seeds.count() == 2
+
+
+@pytest.mark.parametrize("rows, ddl", [
+    ([("a", 1, None), (None, None, 7)], "host string, n int, m long"),
+    ([], "disc_round int, disc_seq long, url string, host string"),
+    ([("a.test", [("/x", "/y"), ("/z", "/")]), ("b.test", []),
+      ("c.test", None)],
+     "_rhost string, _rules array<struct<f:string,t:string>>"),
+])
+def test_driver_frame_equals_list_built(spark, rows, ddl):
+    """``driver_frame`` gives the rows and schema ``createDataFrame``
+    gives for the same list: nulls, no rows, and nested DUST rules."""
+    from crawler_spark.session import driver_frame
+
+    got = driver_frame(spark, rows, ddl)
+    want = spark.createDataFrame(rows, ddl)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
