@@ -412,7 +412,7 @@ def _bench_frontier(spark, n_urls: int) -> dict:
     10^10-row frontier is an executor-count problem, not an algorithmic
     one. Uses the same operators the driver round loop calls
     (``eligible_frontier``, ``topk_per_group``, ``with_global_seq``,
-    ``filter_unseen_via``).
+    ``BloomSeenSet.filter_unseen``).
 
     URL universe: id → ``http://h{hash(id)%n_hosts}.frontier.test/p{id}``
     with a hot host taking ~10% of ids (the skew the salted top-k
@@ -426,7 +426,7 @@ def _bench_frontier(spark, n_urls: int) -> dict:
     from pyspark.sql import functions as F
 
     from crawler_spark.crawl.driver import budget_table, eligible_frontier
-    from crawler_spark.operators.seen import BloomSeenSet, filter_unseen_via
+    from crawler_spark.operators.seen import BloomSeenSet
     from crawler_spark.operators.topk import topk_per_group, with_global_seq
     from crawler_spark.oracle.crawloracle import CrawlConfig
 
@@ -491,7 +491,7 @@ def _bench_frontier(spark, n_urls: int) -> dict:
     # without this Catalyst prunes the global-order window out of the
     # timed plan entirely
     seq_hi = scheduled.agg(F.max("seq")).collect()[0][0]
-    fresh = filter_unseen_via(bloom, discoveries, exact_seen=seen)
+    fresh = bloom.filter_unseen(discoveries, lambda _b: seen)
     merged = (
         frontier.join(scheduled.select("url"), "url", "left_anti")
         .unionByName(fresh)

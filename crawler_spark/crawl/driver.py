@@ -15,7 +15,7 @@ as iterative batch rounds. Each round:
              ──left join corpus── simulated fetch (url → html/status/ct)
              ──extract_page pandas UDF── one parse: text + links (Arrow-batched)
              ──robots + fetchable filters──
-             ──bloom.filter_unseen── URL-seen set (bloom + exact re-check)
+             ──seen.filter_unseen── URL-seen set (bloom|cuckoo + exact re-check)
              ──with_global_seq── discovery priority (disc_round, disc_seq),
                  cached like the schedule
              ──commit── pages/links/discoveries/frontier/cooldown/bloom
@@ -56,7 +56,8 @@ from crawler_spark.crawl.store import (
 from crawler_spark.functions.html import extract_page_udf
 from crawler_spark.functions.urls import get_hostname, is_fetchable
 from crawler_spark.operators.dust import apply_dust_rules
-from crawler_spark.operators.seen import BloomSeenSet
+from crawler_spark.operators.cuckoo import CuckooSeenSet
+from crawler_spark.operators.seen import BloomSeenSet, BucketedSeenSet
 from crawler_spark.operators.topk import topk_per_group, with_global_seq
 from crawler_spark.session import driver_frame
 from crawler_spark.oracle.crawloracle import (
@@ -211,19 +212,6 @@ def seed_discoveries(
     return driver_frame(spark, rows.values(), DISC_SCHEMA), len(rows)
 
 
-def _seen_filter_class(
-    seen_filter: str, buckets: int, bloom_bits: int, cuckoo_entries: int
-):
-    """(filter class, geometry kwargs) of the configured seen filter."""
-    if seen_filter == "cuckoo":
-        from crawler_spark.operators.cuckoo import CuckooSeenSet
-
-        return CuckooSeenSet, dict(n_buckets=buckets, m_entries=cuckoo_entries)
-    if seen_filter != "bloom":
-        raise ValueError(f"seen_filter must be bloom|cuckoo, got {seen_filter!r}")
-    return BloomSeenSet, dict(n_buckets=buckets, m_bits=bloom_bits)
-
-
 def _changed_after(store: CrawlStore, after: int, upto: int) -> bool:
     """Whether a committed round in ``(after, upto]`` crawled or
     discovered anything. Cooldown and period-wait rounds change neither
@@ -235,7 +223,7 @@ def _changed_after(store: CrawlStore, after: int, upto: int) -> bool:
     return False
 
 
-def _load_state(store: CrawlStore, rnd: int, filter_cls, geo: dict):
+def _load_state(store: CrawlStore, rnd: int, empty: BucketedSeenSet):
     """The frontier and seen filter as of committed round ``rnd`` — the
     one loader behind both resume and the between-round reload.
 
@@ -270,10 +258,10 @@ def _load_state(store: CrawlStore, rnd: int, filter_cls, geo: dict):
             )
     c = store.latest_snapshot_round("bloom", rnd)
     if c is None:
-        seen, c = filter_cls.empty(spark, **geo), -1
+        seen, c = empty, -1
     else:
         path = store.table_round_path("bloom", c)
-        seen = filter_cls.load(spark, path, **geo)
+        seen = type(empty).load(spark, path, **empty.geometry)
     if _changed_after(store, c, rnd):
         seen = seen.add(store.discoveries_after(c).select("url"))
     return frontier, seen
@@ -300,11 +288,12 @@ def run_crawl(
     scale; pass None on a real cluster for natural partitioning.
 
     ``frontier_snapshot_every=N`` writes both state snapshots — the
-    frontier and the seen filter — on every N-th round that crawled
-    something (a cooldown or period-wait round changes neither table and
-    writes neither). Resume and the between-round reload are the same
-    step: the newest snapshot of each table plus a replay of the
-    discovery log written after it (``_load_state``). A larger N drops
+    frontier and the seen filter — in each round ``rnd`` that crawled
+    something and has ``rnd % N == 0`` (a cooldown or period-wait round
+    changes neither table and writes neither, even when ``rnd % N ==
+    0``). Resume and the between-round reload are the same step: the
+    newest snapshot of each table plus a replay of the discovery log
+    written after it (``_load_state``). A larger N drops
     two write jobs from most rounds, at the cost of replaying up to N-1
     rounds of the log per reload. Choose by shape: write-bound
     short-frontier crawls want a large N; a 10^10-row frontier whose
@@ -313,13 +302,15 @@ def run_crawl(
     ``seen_filter`` picks the approximate URL-seen layer (the north
     rule's "bloom/cuckoo" pair): ``"bloom"`` (default — smaller per key,
     embarrassingly-parallel OR adds, append-only) or ``"cuckoo"``
-    (``operators.cuckoo.CuckooSeenSet`` — same bucketed layout and probe
-    contract, plus DELETE, which is what makes :func:`retract_urls`
-    recrawl campaigns scale; ``cuckoo_entries`` × 4 slots per bucket).
-    Both filters drive the identical crawl (goldens assert it): the exact
-    seen-log re-check is the correctness authority, the filter only
-    bounds how much of it each round reads. Resume with the same
-    ``seen_filter`` the store was written with.
+    (``operators.cuckoo.CuckooSeenSet`` — same bucketed layer and probe
+    contract, plus a DELETE for callers outside the crawl;
+    ``cuckoo_entries`` × 4 slots per bucket). Both filters drive the
+    identical crawl (goldens assert it): the exact seen-log re-check is
+    the correctness authority, the filter only bounds how much of it
+    each round reads. :func:`retract_urls` works the same under both:
+    it touches neither filter, and the exact re-check keeps the recrawl
+    exact. Resume with the same ``seen_filter`` the store was written
+    with.
 
     ``priority_df`` is the DISTRIBUTED host-priority feed — a DataFrame
     or parquet path with columns ``(host, priority)`` (what the mined
@@ -412,19 +403,20 @@ def run_crawl(
     cooldown: dict[str, int] = {}
     empty_streak = 0  # consecutive rounds scheduling nothing (period wait)
 
-    filter_cls, filter_geo = _seen_filter_class(
-        seen_filter, bloom_buckets, bloom_bits, cuckoo_entries
-    )
+    if seen_filter == "bloom":
+        empty_seen = BloomSeenSet.empty(spark, bloom_buckets, m_bits=bloom_bits)
+    elif seen_filter == "cuckoo":
+        empty_seen = CuckooSeenSet.empty(
+            spark, bloom_buckets, m_entries=cuckoo_entries
+        )
+    else:
+        raise ValueError(f"seen_filter must be bloom|cuckoo, got {seen_filter!r}")
     # the filter's shape, recorded in the store at crawl start and
     # validated on resume: geometry is not recoverable from the snapshot
     # bytes, and a silent mismatch (different bits/buckets/entries)
     # probes the loaded state at the wrong positions — false NEGATIVES,
     # already-crawled urls bypassing the exact re-check
-    geometry = {"seen_filter": seen_filter, "buckets": bloom_buckets}
-    if seen_filter == "cuckoo":
-        geometry["entries"] = cuckoo_entries
-    else:
-        geometry["bits"] = bloom_bits
+    geometry = empty_seen.stored_geometry()
 
     last = store.resume_round() if resume else None
     if last is None:
@@ -447,8 +439,7 @@ def run_crawl(
         # cached before the filter reads it: the seed table is evaluated
         # once for the filter, round 0's schedule and its discovery write
         frontier = frontier.cache()
-        bloom = filter_cls.empty(spark, **filter_geo)
-        bloom = bloom.add(frontier.select("url"))
+        seen = empty_seen.add(frontier.select("url"))
         start_round = 0
         seed_disc = frontier  # committed with round 0
         store.write_filter_geometry(geometry)
@@ -469,7 +460,7 @@ def run_crawl(
         # consumed retraction records (url already recrawled) retire here
         # so one campaign doesn't permanently tax every future resume
         store.retire_retractions()
-        frontier, bloom = _load_state(store, last, filter_cls, filter_geo)
+        frontier, seen = _load_state(store, last, empty_seen)
         if store.has_retractions():
             # resurfaced retracted urls invalidate the manifest's
             # frontier_size, so pay one count job here — retraction
@@ -490,7 +481,7 @@ def run_crawl(
         # persist so rounds scan executor memory (spilling to local disk
         # at 10^8-host sizes), not the parquet files, every round
         prio_df = prio_df.persist()
-    reload_due = False  # a round committed since frontier/bloom were loaded
+    reload_due = False  # a round committed since frontier/seen were loaded
 
     sc = spark.sparkContext
     caller_group = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
@@ -518,9 +509,7 @@ def run_crawl(
                 # rounds) in the round it prepares, so no reload follows
                 # the last round and its jobs count toward this round
                 _t0 = time.perf_counter()
-                frontier, bloom = _load_state(
-                    store, rnd - 1, filter_cls, filter_geo
-                )
+                frontier, seen = _load_state(store, rnd - 1, empty_seen)
                 frontier = frontier.cache()
                 phase_t["reload"] = round(time.perf_counter() - _t0, 3)
                 reload_due = False
@@ -640,7 +629,7 @@ def run_crawl(
                         else driver_frame(spark, [], DISC_SCHEMA)
                     )
                     seed_disc = None
-                    rc = _RoundCommit(store, rnd, spark, bloom.n_buckets,
+                    rc = _RoundCommit(store, rnd, spark, seen.n_buckets,
                                       job_group=job_group, prior_jobs=prior_jobs)
                     rc.begin(_empty_pages(spark), _empty_links(spark))
                     rc.finish(disc_empty, cooldown, stats,
@@ -703,7 +692,7 @@ def run_crawl(
             # concurrently with link filtering + the seen probe + sequencing
             # (all of them read the fetched cache, which the first job to
             # reach a partition fills, running the extraction UDF once)
-            rc = _RoundCommit(store, rnd, spark, bloom.n_buckets,
+            rc = _RoundCommit(store, rnd, spark, seen.n_buckets,
                               job_group=job_group, prior_jobs=prior_jobs)
             rc.begin(pages_df, links.drop("seq"))
 
@@ -745,7 +734,7 @@ def run_crawl(
                 )
 
                 # exact re-check build side: the committed url-only seen log,
-                # PRUNED to the bloom-positive buckets (store.read_seen pushes
+                # PRUNED to the filter-positive buckets (store.read_seen pushes
                 # `bucket IN` into the parquet scan) — the full pages history
                 # never rescans — plus this round's in-flight urls
                 def _seen_hist(buckets, _sched=scheduled, _rem=frontier_rem):
@@ -755,7 +744,7 @@ def run_crawl(
                         .unionByName(_rem.select("url"))
                     )
 
-                unseen = bloom.filter_unseen(cands, seen_for_buckets=_seen_hist)
+                unseen = seen.filter_unseen(cands, _seen_hist)
 
                 _t0 = time.perf_counter()
                 # small_hint here is an ESTIMATE, not a tracked bound: scheduled
@@ -787,7 +776,7 @@ def run_crawl(
                 if rnd % max(1, frontier_snapshot_every) == 0:
                     snapshot = (
                         frontier_rem.unionByName(new_disc),
-                        bloom.add(new_disc.select("url")),
+                        seen.add(new_disc.select("url")),
                     )
                 rc.finish(
                     disc_to_commit, cooldown, stats, n_frontier=n_frontier,
@@ -999,7 +988,7 @@ class _RoundCommit:
         n_frontier: int,
         config: CrawlConfig | None = None,
         phase_timings: dict[str, float] | None = None,
-        snapshot: tuple[DataFrame, BloomSeenSet] | None = None,
+        snapshot: tuple[DataFrame, BucketedSeenSet] | None = None,
     ) -> None:
         """``snapshot=(frontier, seen filter)`` also writes both state
         snapshots for this round; without it, resume replays this

@@ -24,9 +24,9 @@ deletes any orphaned dirs from a crashed round, so re-running a round is
 idempotent — this replaces the reference's ``processing:true`` in-flight
 flags + ``cleanup()`` crash recovery (``storage.ts:182-188, 236-248``).
 
-Crawl state is persisted one way for both state tables: a snapshot on
-every ``frontier_snapshot_every``-th round that crawled something, and
-between snapshots nothing but the append-only logs. A reader rebuilds
+Crawl state is persisted one way for both state tables: a snapshot in
+each round R that crawled something and has ``R % frontier_snapshot_every
+== 0``, and between snapshots nothing but the append-only logs. A reader rebuilds
 either table as of round R from its newest snapshot C <= R plus a
 replay of the discovery log written after C (the frontier also drops
 the pages crawled after C) — ``latest_snapshot_round`` and

@@ -145,7 +145,8 @@ def main() -> None:
                          "content-equal pairs than this")
     ap.add_argument("--snapshot-every", type=int, default=1,
                     help="write the frontier and seen-filter snapshots "
-                         "every N rounds; resume and the per-round "
+                         "in each round R that crawled something and "
+                         "has R %% N == 0; resume and the per-round "
                          "reload replay the discovery log onto the "
                          "newest snapshot")
     ap.add_argument("--write-partitions", type=int, default=8,

@@ -264,6 +264,10 @@ def test_one_round_job_ceiling(spark, tmp_path):
     m = CrawlStore(spark, root).read_manifest(0)["metrics"]
     assert m["scheduled"] == 2 and m["frontier_size"] == 3, m
     assert 0 < m["spark_jobs"] <= ROUND_JOB_CEILING, m["spark_jobs"]
+    # every phase the benchmark reads from a manifest is recorded
+    from perfbench.workloads import MANIFEST_TIMINGS
+
+    assert set(MANIFEST_TIMINGS) <= set(m["timings_sec"]), m["timings_sec"]
 
 
 def test_prune_snapshots_keeps_newest_existing(spark, tmp_path):

@@ -1,8 +1,13 @@
-"""Tests for the scheduler primitives: top-k per group, global seq, bloom."""
+"""Tests for the scheduler primitives: top-k per group, global seq, and
+the bucketed seen filters (bloom and cuckoo)."""
+
+import hashlib
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
+from crawler_spark.operators.cuckoo import CuckooSeenSet
 from crawler_spark.operators.seen import BloomSeenSet
 from crawler_spark.operators.topk import topk_per_group, with_global_seq
 
@@ -75,28 +80,80 @@ def test_bloom_no_false_negatives_and_fp_bound(spark):
     assert fp < 0.02, fp
 
 
-def test_bloom_incremental_add_and_filter_unseen(spark):
+# each filter class with a geometry sized for the tests below
+SEEN_FILTERS = [
+    pytest.param(BloomSeenSet, {"m_bits": 1 << 16}, id="bloom"),
+    pytest.param(CuckooSeenSet, {"m_entries": 1 << 10}, id="cuckoo"),
+]
+
+
+@pytest.mark.parametrize("cls, geo", SEEN_FILTERS)
+def test_bloom_incremental_add_and_filter_unseen(spark, cls, geo):
     batch1 = [(f"http://a.test/{i}",) for i in range(1000)]
     batch2 = [(f"http://b.test/{i}",) for i in range(1000)]
     df1 = spark.createDataFrame(batch1, "url string")
     df2 = spark.createDataFrame(batch2, "url string")
 
-    bloom = BloomSeenSet.build(df1, n_buckets=8, m_bits=1 << 16)
-    bloom = bloom.add(df2)
+    filt = cls.build(df1, n_buckets=8, **geo)
+    filt = filt.add(df2)
 
     seen = df1.unionByName(df2)
     cands = spark.createDataFrame(
         batch1[:50] + [(f"http://c.test/{i}",) for i in range(50)], "url string"
     )
-    out = bloom.filter_unseen(cands, seen).toPandas()
+    out = filt.filter_unseen(cands, lambda _b: seen).toPandas()
     assert sorted(out.url) == sorted(f"http://c.test/{i}" for i in range(50))
+    # the probe's bucket is the seen log's: pmod(xxhash64(url), n_buckets)
+    got = filt.probe(cands, keep_bucket=True).select("url", "bucket")
+    want = cands.select(
+        "url", F.pmod(F.xxhash64("url"), F.lit(8)).cast("int").alias("bucket")
+    )
+    assert sorted(got.collect()) == sorted(want.collect())
 
 
-def test_bloom_checkpoint_roundtrip(spark, tmp_path):
+@pytest.mark.parametrize("cls, geo", SEEN_FILTERS)
+def test_bloom_checkpoint_roundtrip(spark, tmp_path, cls, geo):
     df = spark.createDataFrame([(f"u{i}",) for i in range(100)], "url string")
-    bloom = BloomSeenSet.build(df, n_buckets=4, m_bits=1 << 14)
-    p = str(tmp_path / "bloom")
-    bloom.checkpoint(p)
-    loaded = BloomSeenSet.load(spark, p, n_buckets=4, m_bits=1 << 14)
+    filt = cls.build(df, n_buckets=4, **geo)
+    p = str(tmp_path / "filter")
+    filt.checkpoint(p)
+    loaded = cls.load(spark, p, n_buckets=4, **geo)
     probed = loaded.probe(df).toPandas()
     assert probed.maybe_seen.all()
+
+
+# sha1 of each filter's sorted (bucket, payload, n_items) rows after the
+# sequence in test_stored_state_bytes_pinned, as the filters wrote them
+# before they shared one update layer: a store written then must resume
+# to the same filter state
+PINNED_STATE_SHA1 = {
+    "bloom": "fa7815ec5ec84b885a3a4520ac655bd7c3ea6e56",
+    "cuckoo": "f950f74cbfd2c1e3708158b17f94e72e48953844",
+}
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_stored_state_bytes_pinned(spark, kind):
+    def urls(lo, hi):
+        return spark.range(lo, hi).selectExpr(
+            "concat('http://h', id % 7, '.test/p/', id) AS url"
+        )
+
+    first = urls(0, 400).unionAll(urls(0, 40))  # duplicate rows in a batch
+    if kind == "bloom":
+        filt = BloomSeenSet.empty(spark, n_buckets=4, m_bits=1 << 12)
+        state = filt.add(first).add(urls(300, 700)).blooms
+        n_items = 840  # bloom counts every added row
+    else:
+        filt = CuckooSeenSet.empty(spark, n_buckets=4, m_entries=1 << 10)
+        state = (
+            filt.add(first).add(urls(300, 700)).delete(urls(100, 200)).tables
+        )
+        n_items = 700  # one insertion per distinct url and batch
+    rows = sorted(tuple(r) for r in state.collect())
+    assert sum(r[2] for r in rows) == n_items
+    digest = hashlib.sha1()
+    for bucket, payload, n in rows:
+        digest.update(f"{bucket}:{n}:".encode())
+        digest.update(bytes(payload))
+    assert digest.hexdigest() == PINNED_STATE_SHA1[kind]
