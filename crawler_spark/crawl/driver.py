@@ -503,6 +503,7 @@ def run_crawl(
             job_group = f"crawl-round-{rnd}"
             sc.setJobGroup(job_group, f"crawl round {rnd}")
             prior_jobs = set(sc.statusTracker().getJobIdsForGroup(job_group))
+            prior_compiles = _codegen_compiles(spark)
             phase_t: dict[str, float] = {}
             if reload_due:
                 # re-read the committed state (bounded lineage across
@@ -630,7 +631,8 @@ def run_crawl(
                     )
                     seed_disc = None
                     rc = _RoundCommit(store, rnd, spark, seen.n_buckets,
-                                      job_group=job_group, prior_jobs=prior_jobs)
+                                      job_group=job_group, prior_jobs=prior_jobs,
+                                      prior_compiles=prior_compiles)
                     rc.begin(_empty_pages(spark), _empty_links(spark))
                     rc.finish(disc_empty, cooldown, stats,
                               n_frontier=n_frontier)
@@ -693,7 +695,8 @@ def run_crawl(
             # (all of them read the fetched cache, which the first job to
             # reach a partition fills, running the extraction UDF once)
             rc = _RoundCommit(store, rnd, spark, seen.n_buckets,
-                              job_group=job_group, prior_jobs=prior_jobs)
+                              job_group=job_group, prior_jobs=prior_jobs,
+                              prior_compiles=prior_compiles)
             rc.begin(pages_df, links.drop("seq"))
 
             try:
@@ -872,6 +875,20 @@ def _hot_hosts_from_files(
     ]
 
 
+def _codegen_compiles(spark: SparkSession) -> int | None:
+    """Janino compiles so far in this JVM (Spark's ``CodegenMetrics``
+    counter; in local mode it also counts the compiles tasks do), or
+    ``None`` where the counter cannot be read. Reads a JVM counter: no
+    Spark job."""
+    from py4j.protocol import Py4JError
+
+    try:
+        return int(spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                   .METRIC_COMPILATION_TIME().getCount())
+    except (AttributeError, Py4JError):
+        return None  # diagnostics only (no JVM gateway, or no such counter)
+
+
 class _RoundCommit:
     """Two-stage concurrent round commit.
 
@@ -891,6 +908,9 @@ class _RoundCommit:
     via the driver's per-round ``setJobGroup``) so the manifest can record
     ``spark_jobs`` — the per-round job count the fixed-cost budget tracks:
     the group's job ids less ``prior_jobs``, those it held before the round.
+    With ``prior_compiles`` (the JVM's compile count when the round
+    started) it also records ``codegen_compiles``, the classes the round
+    compiled: 0 once the round's plans are in the generated-class cache.
     """
 
     def __init__(
@@ -901,12 +921,14 @@ class _RoundCommit:
         n_buckets: int,
         job_group: str | None = None,
         prior_jobs: set[int] | frozenset[int] = frozenset(),
+        prior_compiles: int | None = None,
     ):
         from concurrent.futures import ThreadPoolExecutor
 
         self.store, self.rnd, self.spark = store, rnd, spark
         self.n_buckets = n_buckets
         self.job_group, self.prior_jobs = job_group, prior_jobs
+        self.prior_compiles = prior_compiles
         self.timings: dict[str, float] = {}
         self._pool = ThreadPoolExecutor(max_workers=6)
         self._f: dict = {}
@@ -1082,6 +1104,9 @@ class _RoundCommit:
                 metrics["spark_jobs"] = len(ids - self.prior_jobs)
             except Exception:
                 pass  # diagnostics only — never fail a commit over it
+        compiles = _codegen_compiles(self.spark)
+        if self.prior_compiles is not None and compiles is not None:
+            metrics["codegen_compiles"] = compiles - self.prior_compiles
         store.commit_round(rnd, metrics, lineage)
         stats.rounds += 1
         stats.pages += n_pages

@@ -3,7 +3,12 @@ of driver-held tables.
 
 Local-mode defaults mirror what we would set on a real cluster: AQE on
 (runtime re-plan + skew-join backstop), Arrow enabled for pandas UDFs,
-shuffle partitions sized to cores instead of the 200 default.
+shuffle partitions sized to cores instead of the 200 default, and a
+generated-class cache large enough to hold every class a crawl, its
+learn phases and curation compile (``CODEGEN_CACHE_ENTRIES``), so a
+warm round compiles nothing. That cache size is a static SQL conf: it
+is fixed when the session is created, and a session built elsewhere
+(spark-submit, a notebook) keeps its own value.
 """
 
 from __future__ import annotations
@@ -12,6 +17,15 @@ import os
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+
+# Entries in Spark's generated-class cache (spark.sql.codegen.cache.maxEntries,
+# default 100). The working set, counted in one driver with a large cache:
+# round_churn's crawl compiles 177 distinct classes, its learn_outputs 99 and
+# its curation 86; bulk_crawl's crawl then adds 35 and its curation 47, about
+# 450 in all. At 100 entries the rounds evict each other's classes and every
+# round recompiles 89-103 of them (about 7 ms each). 2,000 leaves headroom
+# for the other plan shapes a long-lived driver runs.
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def get_spark(
@@ -25,6 +39,16 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
     On a real cluster this function is a no-op passthrough: spark-submit
     owns master/deploy settings and we only apply SQL conf.
+
+    The generated-class cache holds ``CODEGEN_CACHE_ENTRIES`` classes, so
+    repeated rounds reuse their compiled classes instead of evicting
+    each other's (a round manifest's ``codegen_compiles`` shows it), and
+    generated class names leave out the whole-stage codegen stage id, so
+    a pipeline that AQE numbers differently from one run to the next
+    still finds its class. The cache size is a static SQL conf: it takes
+    effect only when this call creates the session; a session that
+    already exists, or one built elsewhere, keeps its own value.
+    ``extra_conf`` can override both settings.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -47,6 +71,11 @@ def get_spark(
         # mangle line-oriented gate/bench output
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # the cache is keyed by source text; with the whole-stage codegen
+        # stage id in the class name, the same pipeline numbered
+        # differently by AQE (stage order varies with timing) misses it
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -14,9 +14,12 @@ The production invocation shape (north rule: "runs via spark-submit
         --write-partitions 0
 
 On a cluster ``--write-partitions 0`` keeps natural partitioning; the
-session settings come from spark-submit (this script only applies SQL
-conf via get_spark's passthrough behavior when a session already
-exists). Locally it runs as ``python scripts/run_crawl.py ...`` too.
+session settings come from spark-submit. When a session already exists,
+get_spark's passthrough can only apply runtime SQL conf: static SQL conf,
+such as the generated-class cache size
+(``spark.sql.codegen.cache.maxEntries``), keeps the value the session
+was created with, so pass it to spark-submit with ``--conf``. Locally it
+runs as ``python scripts/run_crawl.py ...`` too.
 
 Prints one JSON line of crawl stats on completion.
 """

@@ -244,7 +244,10 @@ def test_one_round_job_ceiling(spark, tmp_path):
     """The jobs of one crawl round, as its manifest counts them, stay at
     or under the count measured when the driver's tables became Arrow
     relations and each round frame was frozen once: a job that creeps
-    back into the round's critical path fails here first."""
+    back into the round's critical path fails here first. The same
+    crawl run again into a fresh store compiles no class (the
+    generated-class cache holds the round's working set) and runs the
+    same jobs."""
     html = (b'<html><body><p>page two body</p><a href="/p3">three</a>'
             b'<a href="/private/x">no</a><a href="http://b.test/">b</a>'
             b'</body></html>')
@@ -257,17 +260,26 @@ def test_one_round_job_ceiling(spark, tmp_path):
     corpus = _to_spark_corpus(spark, pages)
     config = CrawlConfig(budgets={"*": 10}, global_budget=2, max_rounds=1,
                          robots=[("a.test", "/private", False)])
-    root = str(tmp_path / "store")
-    run_crawl(spark, corpus, ["http://a.test/p2", "http://b.test/"], config,
-              root, bloom_buckets=4, seen_filter="cuckoo",
-              cuckoo_entries=1 << 10)
-    m = CrawlStore(spark, root).read_manifest(0)["metrics"]
+
+    def crawl(name):
+        root = str(tmp_path / name)
+        run_crawl(spark, corpus, ["http://a.test/p2", "http://b.test/"],
+                  config, root, bloom_buckets=4, seen_filter="cuckoo",
+                  cuckoo_entries=1 << 10)
+        return CrawlStore(spark, root).read_manifest(0)["metrics"]
+
+    m = crawl("store")
     assert m["scheduled"] == 2 and m["frontier_size"] == 3, m
     assert 0 < m["spark_jobs"] <= ROUND_JOB_CEILING, m["spark_jobs"]
     # every phase the benchmark reads from a manifest is recorded
     from perfbench.workloads import MANIFEST_TIMINGS
 
     assert set(MANIFEST_TIMINGS) <= set(m["timings_sec"]), m["timings_sec"]
+    # a warm repeat reuses every generated class (at Spark's default
+    # cache of 100 entries it recompiled 103 classes here)
+    again = crawl("store2")
+    assert again["codegen_compiles"] == 0, again["codegen_compiles"]
+    assert again["spark_jobs"] == m["spark_jobs"], (again, m)
 
 
 def test_prune_snapshots_keeps_newest_existing(spark, tmp_path):
